@@ -438,8 +438,8 @@ def q_doc_chunk_dedup(spark, sf_dir):
 
 def q_doc_cluster_assign(spark, sf_dir):
     """Near-dup CLUSTER ASSIGNMENT for every doc: transitive closure
-    over verified MinHash-LSH pairs via the alternating-star CC
-    operator, singletons labeling themselves. The oracle recomputes the
+    over verified MinHash-LSH pairs via the CC operator, singletons
+    labeling themselves. The oracle recomputes the
     closure with a RECURSIVE CTE over the exact-Jaccard pair set — the
     first driver check of the CC operator against an independent
     transitive-closure implementation (image_dedup_clusters checks

@@ -55,8 +55,9 @@ def _safe_lists(hash_lists: pd.Series) -> list[np.ndarray]:
 
 
 def _check_num_perm(num_perm: int) -> None:
-    if num_perm & (num_perm - 1):
-        raise ValueError("num_perm must be a power of two (OPH bucketing)")
+    if num_perm <= 0 or num_perm & (num_perm - 1):
+        raise ValueError(
+            "num_perm must be a positive power of two (OPH bucketing)")
 
 
 def _minhash_matrix(hash_lists: pd.Series, num_perm: int,
@@ -182,13 +183,3 @@ def minhash_bucket_kernel(hash_lists: pd.Series, num_perm: int,
 
 def jaccard_estimate(sig_a, sig_b) -> float:
     return float(np.mean(np.asarray(sig_a) == np.asarray(sig_b)))
-
-
-def hyperplane_kernel(vecs: pd.Series, planes: np.ndarray,
-                      weights: np.ndarray) -> pd.Series:
-    if len(vecs) == 0:
-        return pd.Series([], dtype="int64")
-    m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-    bits = (m @ planes) > 0
-    packed = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
-    return pd.Series(packed.astype(np.int64))

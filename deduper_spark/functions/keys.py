@@ -45,15 +45,6 @@ def md5_key_expr(hash_keys: list[str] | tuple[str, ...]) -> Column:
     return F.upper(F.md5(stringify_expr(hash_keys)))
 
 
-def xxhash_key_expr(hash_keys: list[str] | tuple[str, ...]) -> Column:
-    return F.xxhash64(
-        *[
-            F.coalesce(F.col(c).cast("string"), F.lit(NULL_TOKEN))
-            for c in hash_keys
-        ]
-    )
-
-
 def resolve_hash_keys(df: DataFrame, hash_keys: tuple[str, ...]) -> list[str]:
     """Empty hash_keys ⇒ all columns (Deduper.kt:181-186); validate
     user keys ⊆ df.columns (Deduper.kt:177-179)."""

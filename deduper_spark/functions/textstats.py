@@ -1,8 +1,8 @@
 """Text-analysis expressions for training-data pipelines — all JVM-side.
 
 Language-ID (stopword-hit heuristic), quality scoring (length/punct/
-stopword ratios), token counting (whitespace + BPE-ish regex pieces),
-and document fingerprinting. Every expression here is deliberately
+stopword ratios), whitespace token counting, and document
+fingerprinting. Every expression here is deliberately
 ANSI-SQL-mirrorable so the DuckDB oracle can recompute it bit-for-bit
 (__spark_entry__.oracle_sql).
 """
@@ -29,15 +29,6 @@ def token_count_expr(text: str | Column) -> Column:
     trimmed = F.trim(t)
     return F.when(trimmed == "", F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))
-    )
-
-
-def bpe_piece_count_expr(text: str | Column) -> Column:
-    """BPE-ish piece count: word chunks of <=4 chars + digits + punct,
-    via regexp extraction — a deterministic proxy for tokenizer cost."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.size(
-        F.regexp_extract_all(t, F.lit(r"[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]"), 0)
     )
 
 

@@ -126,9 +126,6 @@ def winnow_fingerprints(text: str, min_len: int, k: int = 32) -> np.ndarray:
     return np.unique(mins).view(np.int64)
 
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-
-
 def winnow_fingerprints_batch(
     texts: "list[str]", min_len: int, k: int = 32,
     max_group_chars: int = 1 << 21,
@@ -147,14 +144,16 @@ def winnow_fingerprints_batch(
     power setup, window views) to one slice + unique per doc; pinned
     by test_winnow_batch_matches_per_doc.
 
-    ``max_group_chars`` bounds group scratch (~6 arrays * chars * 8 B);
-    a single text larger than the budget forms its own group and falls
-    back to gram_hashes' internal chunking.
+    ``max_group_chars`` bounds group scratch (~6 arrays * chars * 8 B):
+    a group is flushed before a text would take it over the budget, so
+    only a single text larger than the budget exceeds it, alone in its
+    own group (gram_hashes chunks it internally). Every ineligible text
+    gets its own empty array, so callers may mutate any result.
     """
     w = min_len - k + 1
     if w < 1:
         raise ValueError(f"k ({k}) must be <= min_len ({min_len})")
-    out: "list[np.ndarray]" = [_EMPTY_I64] * len(texts)
+    out: "list[np.ndarray]" = [None] * len(texts)
     group: "list[int]" = []
     chars = 0
 
@@ -174,11 +173,12 @@ def winnow_fingerprints_batch(
 
     for i, t in enumerate(texts):
         if len(t) < min_len:
+            out[i] = np.empty(0, dtype=np.int64)
             continue
+        if chars + len(t) > max_group_chars:
+            flush()
         group.append(i)
         chars += len(t)
-        if chars >= max_group_chars:
-            flush()
     flush()
     return out
 

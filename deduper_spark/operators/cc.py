@@ -7,33 +7,108 @@ connected component. cluster_id = min member id (union-find label),
 which also IS the keep-first survivor (min image_id — the reference's
 first-found-row generalized).
 
-Two algorithms:
+Contract locally, then finish in one task (local union-find before
+the global merge, as in BTS: Load-Balanced Distributed Union-Find,
+ICDE 2024):
 
-* alternating large-star/small-star (DEFAULT) — the "two-phase"
-  algorithm of Kiveris et al., "Connected Components in MapReduce and
-  Beyond" (SoCC'14), also what GraphFrames ships as its default CC.
-  Each round rewires edges toward local minima (large-star: every
-  node links its larger neighbors to its smallest neighbor;
-  small-star: every node links its smaller neighbors to the smallest)
-  which CONTRACTS long paths exponentially: O(log d) rounds on a
-  chain of diameter d, vs O(d) for plain label propagation. A
-  chain-shaped dup graph (consecutive near-dup crawl snapshots) that
-  burned 25 shuffles — or hit the fail-hard — under label propagation
-  converges in ~log2(d) rounds here. Each phase is one groupBy
-  shuffle over the (shrinking) edge list.
+1. Each partition's edge slice runs through one NumPy min-label
+   union-find (``_min_labels``: scatter-min hooking of roots, then
+   pointer jumping) inside a ``mapInPandas``, which turns it into a
+   star forest: every non-root node -> its local min root, at most
+   n_p - 1 rows. Clique-ish dup families and whole chain segments
+   close here.
+2. When the forest fits one task — rows x row width at most
+   ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the partition
+   size AQE already aims for — a single ``coalesce(1)`` pass runs the
+   same kernel over all of it and emits (id, cluster_id) for every
+   node, roots included. That costs one job (the forest stats) and no
+   rounds: dup graphs are scheduling-latency-bound, not data-bound.
+3. Only a forest too large for one task runs alternating
+   large-star/small-star rounds (Kiveris et al., "Connected Components
+   in MapReduce and Beyond", SoCC'14 — GraphFrames' default CC), each
+   followed by another local contraction, until it fits or reaches the
+   provable star-forest fixpoint. ``max_iter`` bounds the rounds and
+   a lost-node assertion checks the labels against the input
+   endpoints. Each round localCheckpoint()s so the plan does not grow
+   superlinearly (SURVEY.md §7 hard part (c)).
 
-* min-label propagation (label_propagation_components) — the plain
-  O(diameter) fixpoint, kept for comparison/verification; dup graphs
-  are usually clique-ish (diameter 1-3) where it is equally cheap.
-
-Each round localCheckpoint()s so the plan does not grow superlinearly
-(SURVEY.md §7 hard part (c)).
+min-label propagation (label_propagation_components) is the plain
+O(diameter) fixpoint, kept as a verification twin.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+
+def _min_labels(src: pd.Series,
+                dst: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find over one edge list: returns (ids, root) where
+    ``ids[root[i]]`` is the smallest id connected to ``ids[i]``.
+
+    Nodes are numbered by ``pd.factorize(sort=True)``, so code order
+    is id order for bigint and string ids alike and the min code of a
+    component is its min id. Each pass hooks every root onto the
+    smallest root it shares an edge with (scatter-min; a root only
+    ever moves to a smaller code, so no cycles), pointer-jumps every
+    node to its root, and drops the edges that closed; every pass
+    merges at least one pair of trees, so the loop terminates.
+    """
+    codes, ids = pd.factorize(pd.concat([src, dst], ignore_index=True),
+                              sort=True)
+    a, b = codes[:len(src)], codes[len(src):]
+    root = np.arange(len(ids))
+    while a.size:
+        np.minimum.at(root, a, b)
+        np.minimum.at(root, b, a)
+        while True:
+            up = root[root]
+            if np.array_equal(up, root):
+                break
+            root = up
+        a, b = root[a], root[b]
+        live = a != b
+        a, b = a[live], b[live]
+    return np.asarray(ids), root
+
+
+def _frame(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    parts = [b for b in batches if len(b)]
+    return pd.concat(parts, ignore_index=True) if parts else None
+
+
+def _contract(edges: DataFrame) -> DataFrame:
+    """(src, dst) -> per partition, its star forest (node, local min
+    root) over the nodes that are not their own root."""
+
+    def forest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdf = _frame(batches)
+        if pdf is not None:
+            ids, root = _min_labels(pdf["src"], pdf["dst"])
+            child = root != np.arange(len(ids))
+            yield pd.DataFrame({"src": ids[child], "dst": ids[root[child]]})
+
+    return edges.mapInPandas(forest, edges.schema)
+
+
+def _finish(forest: DataFrame) -> DataFrame:
+    """The whole forest in one task -> (id, cluster_id) for every node."""
+    t = forest.schema["src"].dataType
+
+    def label(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdf = _frame(batches)
+        if pdf is not None:
+            ids, root = _min_labels(pdf["src"], pdf["dst"])
+            yield pd.DataFrame({"id": ids, "cluster_id": ids[root]})
+
+    schema = StructType([StructField("id", t), StructField("cluster_id", t)])
+    return forest.coalesce(1).mapInPandas(label, schema)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -117,91 +192,89 @@ def connected_components(
     ).where(F.col("src") != F.col("dst"))
     if not edges_distinct:
         e0 = e0.distinct()
-    # lazy: round 1's convergence aggregation materializes e0 together
-    # with the first rewire — one fewer job per call (r6)
-    e0 = e0.localCheckpoint(eager=False)
+    # lazy: the stats aggregation below materializes e0 together with
+    # the contraction — one job
+    e = first = _contract(e0).localCheckpoint(eager=False)
 
-    # no up-front emptiness probe (r6): an empty edge set satisfies the
-    # fixpoint test in round 0 at the cost of one trivial job, so the
-    # dedicated limit(1) action was a job per call on EVERY input
-    e = e0
-    converged = False
-    last_stats = None
-    for _it in range(max_iter):
-        # lazy localCheckpoint: the convergence aggregation below is
-        # the materializing action, so each round costs ONE job for
-        # rewire+checkpoint+stats instead of two (r6 — the alternating
-        # loop is scheduling-latency-bound on small edge sets and the
-        # merged action also skips one full pass at scale)
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        # PROVABLE fixpoint test, checked in the SAME round it is
-        # reached (an equality check against the previous edge set
-        # would burn one extra full iteration): both phases emit edges
-        # oriented src > dst, and the fixpoints of the alternating
-        # algorithm are exactly star forests — every child points at
-        # its one root, roots never appear as src. So converged iff
-        #   (a) each src has exactly one edge (count == distinct srcs)
-        #   (b) no src ever appears as dst
-        # — one aggregation + (when (a) holds) one semi-join probe over
-        # the just-checkpointed edges. n_roots rides the same agg so
-        # the post-loop label-count assert needs no extra job.
+    spark = edges.sparkSession
+    java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    budget = java_utils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    row_bytes = e._jdf.schema().defaultSize()
+    rounds = 0
+    while True:
+        # n_src / n_roots ride the same aggregation for the fixpoint
+        # test and the label-count assert below
         stats = e.agg(
             F.count("*").alias("n"),
             F.count_distinct("src").alias("n_src"),
             F.count_distinct("dst").alias("n_roots"),
         ).collect()[0]
-        last_stats = stats
-        if stats["n"] == stats["n_src"]:
-            roots_as_src = (
-                e.select("dst").join(e.select(F.col("src").alias("dst")),
-                                     "dst", "left_semi").limit(1).count()
+        if stats["n"] * row_bytes <= budget:
+            labels = _finish(e)
+            break
+        # PROVABLE fixpoint test: the contraction and both star phases
+        # emit edges oriented src > dst, and the fixpoints of the
+        # alternating algorithm are exactly star forests — every child
+        # points at its one root, roots never appear as src. So
+        # converged iff
+        #   (a) each src has exactly one edge (count == distinct srcs)
+        #   (b) no src ever appears as dst
+        if stats["n"] == stats["n_src"] and e.select("dst").join(
+                e.select(F.col("src").alias("dst")), "dst", "left_semi"
+        ).limit(1).count() == 0:
+            labels = _star_labels(first, e, stats)
+            break
+        if rounds == max_iter:
+            # silent truncation would split components into WRONG
+            # cluster ids and corrupt survivor selection — fail hard
+            raise RuntimeError(
+                f"connected_components (alternating) did not converge "
+                f"within max_iter={max_iter} rounds"
             )
-            if roots_as_src == 0:
-                converged = True
-                break
+        e = _contract(_small_star(_large_star(e))).localCheckpoint(
+            eager=False)
+        rounds += 1
 
-    if not converged:
-        # silent truncation would split components into WRONG cluster
-        # ids and corrupt survivor selection — fail hard
-        raise RuntimeError(
-            f"connected_components (alternating) did not converge within "
-            f"max_iter={max_iter} rounds"
-        )
+    if nodes is None:
+        return labels
+    # the labeled ids are exactly the forest's endpoints: anti-join
+    # against the checkpoint, not the labels, so the finish runs once
+    singletons = (
+        nodes.select(F.col(nodes.columns[0]).alias("id"))
+        .join(e.select(F.col("src").alias("id"))
+              .unionByName(e.select(F.col("dst").alias("id"))),
+              "id", "left_anti")
+        .withColumn("cluster_id", F.col("id"))
+    )
+    return labels.unionByName(singletons)
 
-    # star forest: children label with their root, roots with themselves
+
+def _star_labels(first: DataFrame, e: DataFrame, stats) -> DataFrame:
+    """Labels of the star forest ``e``: children with their root, roots
+    with themselves. ``first`` is the input's first local contraction,
+    whose endpoints are exactly the input's."""
     roots = e.select(F.col("dst").alias("id")).distinct()
     labels = (
         e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
         .unionByName(roots.withColumn("cluster_id", F.col("id")))
     )
-    # contraction never drops a connected node (every rewiring target is
-    # an existing node id, so endpoints(e) ⊆ endpoints(e0)); ASSERT that
-    # against one count aggregation over e0. The labeled count needs no
-    # job: at the fixpoint srcs are unique and disjoint from dsts, so
-    # |labels| = n + n_roots from the convergence stats (r6 — the
-    # former labels.count() also re-ran the roots distinct).
-    n_labeled = last_stats["n"] + last_stats["n_roots"]
-    if last_stats["n"]:
-        n_orig = (
-            e0.select(F.col("src").alias("id"))
-            .unionByName(e0.select(F.col("dst").alias("id")))
-            .agg(F.count_distinct("id").alias("n")).collect()[0]["n"]
+    # rounds never drop a connected node (every rewiring target is an
+    # existing node id, so endpoints(e) ⊆ endpoints(first)); ASSERT that
+    # against one count aggregation over first. At the fixpoint srcs
+    # are unique and disjoint from dsts, so |labels| = n + n_roots.
+    n_labeled = stats["n"] + stats["n_roots"]
+    n_orig = (
+        first.select(F.col("src").alias("id"))
+        .unionByName(first.select(F.col("dst").alias("id")))
+        .agg(F.count_distinct("id").alias("n")).collect()[0]["n"]
+    )
+    if n_labeled != n_orig:
+        raise RuntimeError(
+            f"connected_components lost nodes during contraction: "
+            f"{n_orig} edge endpoints, {n_labeled} labeled"
         )
-        if n_labeled != n_orig:
-            raise RuntimeError(
-                f"connected_components lost nodes during contraction: "
-                f"{n_orig} edge endpoints, {n_labeled} labeled"
-            )
-    out = labels
-
-    if nodes is not None:
-        singletons = (
-            nodes.select(F.col(nodes.columns[0]).alias("id"))
-            .join(out.select("id"), "id", "left_anti")
-            .withColumn("cluster_id", F.col("id"))
-        )
-        out = out.unionByName(singletons)
-    return out
+    return labels
 
 
 def label_propagation_components(

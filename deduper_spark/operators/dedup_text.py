@@ -231,8 +231,8 @@ def minhash_doc_clusters(df: DataFrame, id_col: str = "doc_id",
     """(doc_id, cluster_id) — near-dup cluster assignment for EVERY doc.
 
     Transitive closure over the verified MinHash-LSH pair stream
-    (minhash_lsh_doc_pairs) via the O(log d) alternating-star
-    connected-components operator (cc.py:85); singletons label
+    (minhash_lsh_doc_pairs) via the connected-components operator
+    (cc.py: local union-find contraction, then one task); singletons label
     themselves. cluster_id = min doc id of the component — the same
     min-id survivor contract as the flagship pipeline, now exposed at
     document level (the image side ships it as image_dedup_clusters).

@@ -167,7 +167,8 @@ def dedup_image_dir(spark, path: str, max_hamming: int = 6,
         -> int64_band_buckets + hamming_candidate_pairs (co-located
            self-join, inline bit_count predicate, hot buckets salted
            with the triangle-block recall guarantee)
-        -> connected_components (alternating large/small-star)
+        -> connected_components (per-partition union-find contraction,
+           single-task finish)
 
     Returns (id, cluster_id, keep): id is the file origin, cluster_id
     the component's min id, keep the pipeline's keep-first rule

@@ -47,22 +47,6 @@ def verify_jaccard(
     )
 
 
-def verify_hamming(
-    pairs: DataFrame, feats: DataFrame, bits_col: str, max_hamming: int,
-    score_name: str = "hamming",
-) -> DataFrame:
-    """feats: (id, <bits_col>: long). Hamming on 64-bit fingerprints."""
-    j = _attach(pairs, feats, [bits_col])
-    ham = F.bit_count(
-        F.col(f"{bits_col}_l").bitwiseXOR(F.col(f"{bits_col}_r"))
-    )
-    return (
-        j.withColumn(score_name, ham)
-        .where(F.col(score_name) <= max_hamming)
-        .select("id_l", "id_r", "families", score_name)
-    )
-
-
 def verify_psnr(
     pairs: DataFrame, images: DataFrame, psnr_threshold_db: float
 ) -> DataFrame:

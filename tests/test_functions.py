@@ -129,6 +129,39 @@ def test_minhash_matches_sort_reference():
         assert all(np.array_equal(a, b) for a, b in zip(want, got))
 
 
+@pytest.mark.parametrize("num_perm", [0, -4, 12])
+def test_minhash_rejects_bad_num_perm(num_perm):
+    """num_perm must be a positive power of two: 0 used to pass the
+    bit test (0 & -1 == 0) and fail later inside the kernel."""
+    with pytest.raises(ValueError, match="power of two"):
+        minhash_kernel(pd.Series([[1, 2, 3]]), num_perm, seed=1)
+
+
+# --------------------------------------------------------------- winnow
+
+def test_winnow_batch_group_budget_and_fresh_empties(monkeypatch):
+    """A group is flushed before a text would cross max_group_chars,
+    so only a lone over-budget text exceeds it; ineligible texts each
+    get their own empty array."""
+    from deduper_spark.functions import winnow
+
+    seen = []
+    real = winnow.gram_hashes
+
+    def spy(codes, k):
+        seen.append(len(codes))
+        return real(codes, k)
+
+    monkeypatch.setattr(winnow, "gram_hashes", spy)
+    texts = ["a" * 60, "b" * 60, "short", "c" * 300, "d" * 50, "", "e" * 70]
+    out = winnow.winnow_fingerprints_batch(texts, 45, max_group_chars=130)
+    assert seen == [120, 300, 120]
+    assert all(n <= 130 or n == 300 for n in seen)
+    empties = [out[2], out[5]]
+    assert all(e.size == 0 and e.dtype == np.int64 for e in empties)
+    assert empties[0] is not empties[1]
+
+
 # -------------------------------------------------------------- simhash
 
 def test_simhash_properties():

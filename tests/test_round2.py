@@ -317,15 +317,19 @@ def test_ivf_topk_recall(spark):
 
 # ------------------------------------------------------ CC guard
 
-def test_cc_nonconvergence_raises(spark):
+def test_cc_nonconvergence_raises(spark, star_path):
+    """max_iter bounds the star rounds, which only a forest too large
+    for one task runs — so force that path (a 12-edge chain otherwise
+    closes in the single-task finish)."""
     from deduper_spark.operators.cc import connected_components
 
     chain = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)],
         ["id_l", "id_r"],
     )
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(chain, max_iter=3)
-    # and converges fine when allowed enough rounds
-    ok = connected_components(chain, max_iter=20)
-    assert ok.where(F.col("cluster_id") == "n00").count() == 13
+    with star_path():
+        with pytest.raises(RuntimeError, match="converge"):
+            connected_components(chain, max_iter=3)
+        # and converges fine when allowed enough rounds
+        ok = connected_components(chain, max_iter=20)
+        assert ok.where(F.col("cluster_id") == "n00").count() == 13

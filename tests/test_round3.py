@@ -34,8 +34,9 @@ def _union_find(n_nodes, edges):
 
 def test_cc_alternating_chain_converges_fast(spark):
     """A 400-node chain: O(d) label propagation burns 400 rounds (fails
-    its max_iter=25 guard); the alternating algorithm contracts it in
-    O(log d)."""
+    its max_iter=25 guard); connected_components closes it (its star
+    rounds, O(log d), are checked on the same chain in
+    test_cc_alternating_matches_union_find)."""
     from deduper_spark.operators.cc import (
         connected_components,
         label_propagation_components,
@@ -53,28 +54,75 @@ def test_cc_alternating_chain_converges_fast(spark):
         label_propagation_components(edges, max_iter=25)
 
 
-def test_cc_alternating_matches_union_find(spark):
-    """Random sparse graph: alternating CC == exact driver union-find."""
+def _random_sparse(rng):
+    raw = [(rng.randrange(300), rng.randrange(300)) for _ in range(220)]
+    return 300, [(a, b) for a, b in raw if a != b]
+
+
+def _two_cliques(rng):
+    # interleaved ids: clique A holds the even nodes, clique B the odd
+    return 80, [(a, b) for parity in (0, 1)
+                for a in range(parity, 80, 2)
+                for b in range(a + 2, 80, 2)]
+
+
+CC_GRAPHS = {
+    "random_sparse": _random_sparse,
+    "chain_400": lambda rng: (400, [(i, i + 1) for i in range(399)]),
+    # hub in the middle: the min id is a leaf, not the hub
+    "giant_star": lambda rng: (2001, [(1000, i) for i in range(2001)
+                                      if i != 1000]),
+    "two_cliques": _two_cliques,
+    "no_edges": lambda rng: (50, []),
+}
+
+
+@pytest.mark.parametrize("path", ["single_task", "star_rounds"])
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@pytest.mark.parametrize("graph", sorted(CC_GRAPHS))
+def test_cc_alternating_matches_union_find(spark, star_path, monkeypatch,
+                                           graph, id_type, path):
+    """CC labels == exact driver union-find on every graph shape, id
+    type and path; cluster_id is the min member id (keep-first). The
+    NumPy kernel alone must match too: the contraction + finish pair
+    can mask a kernel that only half-compresses its trees."""
+    import contextlib
     import random
 
-    from deduper_spark.operators.cc import connected_components
+    import pandas as pd
 
-    rng = random.Random(7)
-    n = 300
-    raw = [(rng.randrange(n), rng.randrange(n)) for _ in range(220)]
-    raw = [(a, b) for a, b in raw if a != b]
+    from deduper_spark.operators import cc
+
+    n, raw = CC_GRAPHS[graph](random.Random(7))
     truth = _union_find(n, raw)
-
-    ids = [f"n{i:05d}" for i in range(n)]
+    # both id maps increase with the node index, so min id == min index
+    ids = ([i * 7919 - 10**12 for i in range(n)] if id_type == "bigint"
+           else [f"n{i:05d}" for i in range(n)])
+    pos = {v: i for i, v in enumerate(ids)}
+    kid, root = cc._min_labels(pd.Series([ids[a] for a, _ in raw]),
+                               pd.Series([ids[b] for _, b in raw]))
+    assert {pos[v]: truth[pos[v]] for v in kid} == \
+        {pos[v]: pos[w] for v, w in zip(kid, kid[root])}
     edges = spark.createDataFrame(
-        [(ids[a], ids[b]) for a, b in raw], ["id_l", "id_r"]
+        [(ids[a], ids[b]) for a, b in raw], f"id_l {id_type}, id_r {id_type}"
     )
-    nodes = spark.createDataFrame([(i,) for i in ids], ["id"])
-    got = {r["id"]: r["cluster_id"]
-           for r in connected_components(edges, nodes=nodes).collect()}
+    nodes = spark.createDataFrame([(i,) for i in ids], f"id {id_type}")
+
+    rounds = []
+    small_star = cc._small_star
+
+    def counted(e):
+        rounds.append(e)
+        return small_star(e)
+
+    monkeypatch.setattr(cc, "_small_star", counted)
+    with star_path() if path == "star_rounds" else contextlib.nullcontext():
+        got = {r["id"]: r["cluster_id"]
+               for r in cc.connected_components(edges, nodes=nodes).collect()}
     assert len(got) == n
-    for i in range(n):
-        assert got[ids[i]] == ids[truth[i]], f"node {i}"
+    assert got == {ids[i]: ids[truth[i]] for i in range(n)}
+    if path == "single_task":
+        assert not rounds
 
 
 # --------------------------------------------------- simhash doc pairs
