@@ -6,8 +6,8 @@ Each query is forced end-to-end with the noop sink (full materialization,
 no driver collect); the image pipeline is timed through its own actions
 and reported with an images/sec figure as well.
 
-Scaling-efficiency evidence (local[8] vs local[32]) lives in
-tools/bench_scaling.py → BENCH/BASELINE.md.
+Scaling-efficiency evidence (local[8] vs local[32]) is recorded in
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -50,8 +50,8 @@ class _HostLabels:
     tail of a burst as dirty), the host-wide busy-core average OVER
     the window (own job + tenants), and the clean verdict:
     busy_before <= 4 tenant cores, falling back to load_before < 3.0
-    (the ungated tools/bench_scaling.py threshold) when the sample is
-    high — both must look dirty for the label to be dirty."""
+    when the sample is high — both must look dirty for the label to
+    be dirty."""
 
     CLEAN_LOAD = 3.0
     CLEAN_TENANT_CORES = 4.0
@@ -98,13 +98,13 @@ def _stage_count(spark, group: str) -> int:
 
 
 def main() -> None:
+    from deduper_spark.session import get_spark, host_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     sf = _sf_from_dir(sf_dir)
     no_aqe = "--no-aqe" in sys.argv
     launch_load = round(_load1(), 2)
-
-    from deduper_spark.session import get_spark
 
     extra = {"spark.sql.adaptive.enabled": "false"} if no_aqe else None
     spark = get_spark("bench", master=f"local[{cpus}]",
@@ -117,8 +117,8 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     # JVM warmup before the timed loop: the session's first job pays
-    # one-time codegen JIT + scan-path init (steady-state exclusion,
-    # same rationale as tools/bench_scaling.py)
+    # one-time codegen JIT + scan-path init (steady-state exclusion:
+    # a long-lived cluster pays it at startup, not per job)
     _force(qfns["agg_pricing"](spark, sf_dir))
 
     # ---- relational / text / vector headline queries -------------------
@@ -163,7 +163,7 @@ def main() -> None:
     # steady-state warmup: one tiny end-to-end run first — the first
     # execution of the pipeline DAG pays one-time JVM costs (codegen
     # JIT, Arrow init) a long-lived cluster pays at startup, not per
-    # job (same exclusion as tools/bench_scaling.py)
+    # job (same exclusion as the warmup above)
     _w = make_df(spark, seed=43, n=1000).persist()
     _w.count()
     DedupPipeline(

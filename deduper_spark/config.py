@@ -15,8 +15,9 @@ class FuzzyConfig:
     """Knobs for the near-duplicate (fuzzy) paths.
 
     Defaults chosen so band structure (bands x rows_per_band =
-    num_perm) gives an LSH S-curve threshold around jaccard ~0.5:
-    t ≈ (1/b)^(1/r) = (1/16)^(1/8) ≈ 0.71.
+    num_perm) puts the LSH S-curve threshold at the verification
+    threshold: t ≈ (1/b)^(1/r) = (1/16)^(1/8) ≈ 0.71, next to
+    jaccard_threshold = 0.7.
     """
 
     # caption shingling
@@ -28,7 +29,6 @@ class FuzzyConfig:
     minhash_seed: int = 42
     jaccard_threshold: float = 0.7
     # SimHash
-    simhash_bits: int = 64
     simhash_hamming_threshold: int = 3
     # phash
     phash_hamming_threshold: int = 6

@@ -37,29 +37,14 @@ from deduper_spark.functions.kernels import (  # noqa: F401 (re-export)
 )
 
 
-def minhash_udf(num_perm: int = 128, seed: int = 42):
-    # the inner fn must reference ONLY the pyspark-free kernels module:
-    # referencing anything from THIS module would make every worker
-    # import pyspark.sql (measured ~45 s across 32 cold workers)
-    from deduper_spark.functions import kernels
-
-    def _minhash(hashes):
-        return kernels.minhash_kernel(hashes, num_perm, seed)
-
-    return F.pandas_udf(_minhash, ArrayType(LongType()))
-
-
-def minhash_expr(shingle_hashes: str | Column, num_perm: int = 128,
-                 seed: int = 42) -> Column:
-    c = F.col(shingle_hashes) if isinstance(shingle_hashes, str) else shingle_hashes
-    return minhash_udf(num_perm, seed)(c)
-
-
 def minhash_buckets_udf(num_perm: int = 128, bands: int = 16,
                         seed: int = 42):
     """Fused signature + banding (kernels.minhash_bucket_kernel): the
     UDF returns the per-band bucket hashes directly — 8x less Arrow
     return payload than shipping the signature out for JVM banding."""
+    # the inner fn must reference ONLY the pyspark-free kernels module:
+    # referencing anything from THIS module would make every worker
+    # import pyspark.sql (measured ~45 s across 32 cold workers)
     from deduper_spark.functions import kernels
 
     def _buckets(hashes):

@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType
 
 
 def _cosine_cols(dot, n_l, n_r):
@@ -67,25 +67,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Sign-random-projection bucket id: 64>=n_planes bits packed into
-    a long. NumPy matmul over the whole Arrow batch."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
-    weights = (1 << np.arange(n_planes, dtype=np.uint64))
-
-    @F.pandas_udf(LongType())
-    def _sig(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (m @ planes) > 0
-        packed = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
-        return pd.Series(packed.astype(np.int64))
-
-    return _sig
-
-
 def hyperplane_signatures_udf(dim: int | None, n_planes: int, n_tables: int,
                               seed: int = 42):
     """``n_tables`` INDEPENDENT sign-random-projection signatures per
@@ -99,8 +80,6 @@ def hyperplane_signatures_udf(dim: int | None, n_planes: int, n_tables: int,
     planes for a given (dim, n_planes, n_tables, seed) on every task,
     and the caller no longer needs a driver-side limit(1).collect()
     probe job just to learn the vector width."""
-    from pyspark.sql.types import ArrayType
-
     weights = (1 << np.arange(n_planes, dtype=np.uint64))
     planes_by_dim: dict[int, np.ndarray] = {}
 
@@ -264,12 +243,12 @@ def lsh_topk(
     re-rank within. The probe explosion happens on the QUERY side only
     (small), so the corpus is still touched once, hash-partitioned on
     its single true bucket."""
-    sig = hyperplane_signature_udf(dim, n_planes, seed)
-    c = _with_norm(corpus, id_col, vec_col).withColumn("bucket", sig("v"))
+    bucket = hyperplane_signatures_udf(dim, n_planes, 1, seed)("v")[0]
+    c = _with_norm(corpus, id_col, vec_col).withColumn("bucket", bucket)
     masks = F.array(*[F.lit(m) for m in probe_masks(n_planes, probe_radius)])
     q = (
         _with_norm(queries, id_col, vec_col)
-        .withColumn("sig", sig("v"))
+        .withColumn("sig", bucket)
         .select(
             F.col("id").alias("query_id"), F.col("v").alias("qv"),
             F.col("norm").alias("qnorm"),

@@ -31,9 +31,6 @@ ICDE 2024):
    a lost-node assertion checks the labels against the input
    endpoints. Each round localCheckpoint()s so the plan does not grow
    superlinearly (SURVEY.md §7 hard part (c)).
-
-min-label propagation (label_propagation_components) is the plain
-O(diameter) fixpoint, kept as a verification twin.
 """
 
 from __future__ import annotations
@@ -175,7 +172,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     max_iter: int = 50,
     id_type: str = "string",
-    algorithm: str = "alternating",
     edges_distinct: bool = False,
 ) -> DataFrame:
     """edges: (id_l, id_r). nodes: (id) incl. singletons (optional).
@@ -183,10 +179,8 @@ def connected_components(
 
     ``edges_distinct=True`` skips the defensive input distinct — every
     in-engine pair generator ends in a groupBy/distinct on (id_l, id_r)
-    so the dedup Exchange here would be a pure repeat (r6)."""
-    if algorithm == "label_prop":
-        return label_propagation_components(edges, nodes, max_iter)
-
+    so the dedup Exchange here would be a pure repeat (r6).
+    ``id_type`` is ignored: labels keep the input's id type."""
     e0 = edges.select(
         F.col("id_l").alias("src"), F.col("id_r").alias("dst")
     ).where(F.col("src") != F.col("dst"))
@@ -229,7 +223,7 @@ def connected_components(
             # silent truncation would split components into WRONG
             # cluster ids and corrupt survivor selection — fail hard
             raise RuntimeError(
-                f"connected_components (alternating) did not converge "
+                f"connected_components did not converge "
                 f"within max_iter={max_iter} rounds"
             )
         e = _contract(_small_star(_large_star(e))).localCheckpoint(
@@ -275,80 +269,3 @@ def _star_labels(first: DataFrame, e: DataFrame, stats) -> DataFrame:
             f"{n_orig} edge endpoints, {n_labeled} labeled"
         )
     return labels
-
-
-def label_propagation_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Plain min-id label propagation to a fixpoint — O(diameter)
-    rounds; kept as the verification twin of the alternating
-    algorithm (clique-ish dup graphs converge in 2-3 rounds)."""
-    sym = (
-        edges.select(F.col("id_l").alias("src"), F.col("id_r").alias("dst"))
-        .unionByName(
-            edges.select(F.col("id_r").alias("src"), F.col("id_l").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-
-    converged = False
-    for _it in range(max_iter):
-        # neighbor minimum in one agg, then elementwise min with own
-        # label; the changed flag is computed IN the round so the
-        # convergence probe is a cheap scan of the round's checkpoint,
-        # not an extra join+shuffle
-        if _it == 0:
-            # label(v) == v initially, so round 0 needs NO label join:
-            # min over neighbors' labels == min over neighbor ids
-            neigh = (
-                sym.groupBy("src").agg(F.min("dst").alias("nmin"))
-                .withColumnRenamed("src", "id")
-            )
-        else:
-            neigh = (
-                sym.join(labels.withColumnRenamed("id", "dst"), "dst")
-                .groupBy("src")
-                .agg(F.min("label").alias("nmin"))
-                .withColumnRenamed("src", "id")
-            )
-        stepped = (
-            labels.join(neigh, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-                (F.coalesce(F.col("nmin"), F.col("label")) < F.col("label"))
-                .alias("__chg"),
-            )
-            .localCheckpoint()
-        )
-        labels = stepped.select("id", "label")
-        if stepped.where(F.col("__chg")).limit(1).count() == 0:
-            converged = True
-            break
-
-    if not converged:
-        raise RuntimeError(
-            f"label_propagation_components did not converge within "
-            f"max_iter={max_iter} rounds (component diameter too large)"
-        )
-
-    out = labels.withColumnRenamed("label", "cluster_id")
-    if nodes is not None:
-        singletons = (
-            nodes.select(F.col(nodes.columns[0]).alias("id"))
-            .join(out.select("id"), "id", "left_anti")
-            .withColumn("cluster_id", F.col("id"))
-        )
-        out = out.unionByName(singletons)
-    return out

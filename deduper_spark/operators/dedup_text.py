@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from deduper_spark.config import FuzzyConfig
 from deduper_spark.functions.keys import md5_key_expr
-from deduper_spark.functions.minhash import minhash_buckets_expr, minhash_expr
+from deduper_spark.functions.minhash import minhash_buckets_expr
 from deduper_spark.functions.simhash import simhash_expr
 from deduper_spark.functions.text import (
     normalize_expr,
@@ -40,9 +40,8 @@ def exact_doc_dedup(df: DataFrame, id_col: str = "doc_id",
 
 def doc_features(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text",
-                 cfg: FuzzyConfig | None = None,
-                 with_minhash: bool = True,
-                 with_simhash: bool = True) -> DataFrame:
+                 cfg: FuzzyConfig | None = None) -> DataFrame:
+    """(id, norm_text, shingle_hashes, simhash) per document."""
     cfg = cfg or FuzzyConfig()
     out = df.select(
         F.col(id_col).alias("id"),
@@ -52,13 +51,7 @@ def doc_features(df: DataFrame, id_col: str = "doc_id",
         "shingle_hashes",
         shingle_hashes_expr(shingles_expr("tokens", cfg.shingle_k)),
     )
-    if with_minhash:
-        out = out.withColumn(
-            "minhash_sig",
-            minhash_expr("shingle_hashes", cfg.num_perm, cfg.minhash_seed),
-        )
-    if with_simhash:
-        out = out.withColumn("simhash", simhash_expr(token_hashes_expr("tokens")))
+    out = out.withColumn("simhash", simhash_expr(token_hashes_expr("tokens")))
     return out.drop("tokens")
 
 
@@ -69,7 +62,7 @@ def minhash_lsh_doc_pairs(df: DataFrame, id_col: str = "doc_id",
 
     feats is pinned with localCheckpoint: it feeds BOTH the banding
     side and the exact-Jaccard verification join, and without the pin
-    the doc_features projection (normalize + shingle + minhash Arrow
+    the feature projection (tokenize + shingle + minhash Arrow
     work) executes twice end-to-end — the exact double-execution the
     flagship pipeline pins at pipeline.py fuzzy_ok (measured as the
     BENCH_r02 doc_minhash_lsh 2x regression)."""
@@ -122,7 +115,7 @@ def simhash_doc_pairs(df: DataFrame, id_col: str = "doc_id",
     pairs at n=400k) dies before the pair-dedup shuffle. No features
     join at all: feats feeds only the banding projection."""
     cfg = cfg or FuzzyConfig()
-    feats = doc_features(df, id_col, text_col, cfg, with_minhash=False)
+    feats = doc_features(df, id_col, text_col, cfg)
     bb = int64_band_buckets(feats, "id", "simhash", cfg.phash_band_bits,
                             "simhash", cfg.simhash_hamming_threshold)
     pairs, _ = hamming_candidate_pairs(bb, cfg.max_bucket_size,
@@ -248,7 +241,6 @@ def minhash_doc_clusters(df: DataFrame, id_col: str = "doc_id",
     comp = connected_components(
         pairs.select("id_l", "id_r"),
         nodes=df.select(F.col(id_col).alias("id")),
-        id_type=dict(df.dtypes)[id_col],
         # verified pairs end in a groupBy(id_l, id_r) — already distinct
         edges_distinct=True,
     )

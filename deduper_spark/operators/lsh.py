@@ -7,13 +7,13 @@ pairs; verification (verify.py) then confirms or rejects.
 
 Scale design (the part that has to survive 100 TB):
   * banding is a single projection + posexplode — no shuffle;
-  * the candidate self-join shuffles both sides hash-partitioned on
-    (band, bucket): one co-located shuffle, AQE skew-split on;
+  * pairs come from grouping each (family, band, bucket): one hash
+    Exchange, with the i<j pairs enumerated inside codegen;
   * HOT BUCKETS (stop-shingle bands, constant captions) are the skew
     killer: a bucket of size s yields s(s-1)/2 pairs. Buckets larger
-    than max_bucket_size are dropped from pairing (standard practice —
-    their members are near-universal patterns, not duplicates) and
-    reported in the stage metrics rather than silently eaten.
+    than max_bucket_size are salted into sub-buckets of about that
+    size; buckets larger than SALT_CAP are stop-patterns, dropped from
+    pairing and reported rather than silently eaten.
   * pair de-dup across bands/families is a groupBy on (id_l, id_r) —
     again hash-partitioned, no global structure.
 """
@@ -23,61 +23,32 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Buckets with more members than this are stop-patterns (boilerplate
+# shingles, constant captions), not duplicate families: they are
+# dropped from pairing and reported.
+SALT_CAP = 20_000
 
-def band_buckets(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    bands: int,
-    rows_per_band: int,
-    family: str,
-) -> DataFrame:
-    """(id, band, bucket) — one row per band per input row.
 
-    bucket = xxhash64 over the band's signature slice; band id is mixed
-    in so buckets from different bands never collide into one join key.
-    """
-    band_structs = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.xxhash64(
-                b, F.slice(F.col(sig_col), b * rows_per_band + F.lit(1),
-                           F.lit(rows_per_band))
-            ).alias("bucket"),
-        ),
+def _admit(buckets: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Size each (family, band, bucket) group: returns the rows of the
+    buckets with 2..SALT_CAP members, tagged with ``bucket_size``, and
+    the (family, band, bucket, bucket_size) rows of the dropped ones."""
+    key = ["family", "band", "bucket"]
+    sizes = buckets.groupBy(*key).agg(F.count("*").alias("bucket_size"))
+    admitted = sizes.where(
+        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= SALT_CAP)
     )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(band_structs).alias("bb"))
-        .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .withColumn("family", F.lit(family))
-    )
-
-
-def band_bucket_array_expr(sig_col: str | Column, bands: int,
-                           rows_per_band: int) -> Column:
-    """Pre-band a signature into its per-band bucket hashes (array of
-    ``bands`` longs) — same bucket values as band_buckets, computed
-    eagerly so the checkpointed feature row carries ``bands`` longs
-    instead of the full num_perm-element signature (an ~8x cut in the
-    materialized feature payload). NOTE: the flagship pipeline now
-    fuses banding INSIDE the minhash UDF (minhash_buckets_expr) so the
-    signature never crosses Arrow at all; this JVM-side variant remains
-    for callers that already hold a signature column."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            b.cast("int"),
-            F.slice(sig, b * rows_per_band + F.lit(1), F.lit(rows_per_band)),
-        ),
-    )
+    dropped = sizes.where(F.col("bucket_size") > SALT_CAP)
+    # NB not broadcast: `admitted` has one row per distinct bucket —
+    # billions at corpus scale. Equi-join on the bucket key co-shuffles
+    # with the pairing groupBy; AQE broadcasts it when it is in fact small.
+    return buckets.join(admitted.select(*key, "bucket_size"), key), dropped
 
 
 def array_band_buckets(df: DataFrame, id_col: str, buckets_col: str,
                        family: str) -> DataFrame:
-    """(id, band, bucket) from a precomputed bucket array
-    (band_bucket_array_expr) — posexplode, zero shuffle."""
+    """(id, band, bucket) from a precomputed per-band bucket array
+    (minhash_buckets_expr) — posexplode, zero shuffle."""
     return (
         df.select(F.col(id_col).alias("id"),
                   F.posexplode(buckets_col).alias("band", "bucket"))
@@ -155,8 +126,6 @@ def int64_band_buckets(
 def hamming_candidate_pairs(
     buckets: DataFrame,
     max_bucket_size: int = 200,
-    hot_bucket_policy: str = "salt",
-    salt_cap: int = 20_000,
     with_distance: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """candidate_pairs for Hamming families (simhash/phash), with the
@@ -173,9 +142,9 @@ def hamming_candidate_pairs(
     shuffle — the downstream groupBy sees ~confirmed pairs only.
 
     buckets: (family, band, bucket, id, val, max_ham). Sizing and
-    hot-bucket accounting are identical to candidate_pairs, but the
-    "salt" policy here is a TRIANGLE-BLOCK decomposition, not scalar
-    salting: a hot bucket's members get a sub-bucket index u =
+    hot-bucket accounting are identical to candidate_pairs, but a hot
+    bucket is split by a TRIANGLE-BLOCK decomposition, not scalar
+    salting: its members get a sub-bucket index u =
     pmod(xxhash64(id), n_sub), and each row is replicated into the
     n_sub blocks {(min(u,k), max(u,k)) : k < n_sub}; block (a, a)
     pairs sub-bucket a with itself, block (a, b) with a < b pairs
@@ -188,57 +157,41 @@ def hamming_candidate_pairs(
     guarantee), but per-task work is bounded by ~max_bucket_size² and
     the s²/2 comparisons of an s-member bucket spread across
     n_sub(n_sub+1)/2 tasks instead of pinning one. Buckets beyond
-    ``salt_cap`` are stop-patterns and are still dropped + metered.
+    ``SALT_CAP`` are stop-patterns and are still dropped + metered.
 
     Returns (pairs(id_l, id_r, families), dropped_buckets);
     ``with_distance`` adds the pair's Hamming distance (min across
     families — for a single-family input it IS the distance).
     """
     key = ["family", "band", "bucket"]
-    sizes = buckets.groupBy(*key).agg(F.count("*").alias("bucket_size"))
-    hard_cap = max_bucket_size if hot_bucket_policy == "drop" else salt_cap
-    admitted = sizes.where(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= hard_cap)
+    b, dropped = _admit(buckets)
+    # Cold buckets (the overwhelming majority) take this path too:
+    # n_sub=1, u=0, a single (0,0) block — no row multiplication,
+    # and the grouping distribution on key+(bu,bv) equals the
+    # unsalted key distribution, so the only cost is per-row
+    # expression work (xxhash64 + one-element explode) inside the
+    # same codegen stage. A hot/cold split was considered and
+    # declined: it doubles the plan for a constant-factor win the
+    # benches don't show.
+    n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size)) \
+        .cast("int")
+    b = (
+        b.withColumn("n_sub", n_sub)
+        .withColumn("u", F.pmod(F.xxhash64("id"),
+                                F.col("n_sub")).cast("int"))
+        .drop("bucket_size")
     )
-    dropped = sizes.where(F.col("bucket_size") > hard_cap)
-
-    b = buckets.join(admitted.select(*key, "bucket_size"), key)
-    if hot_bucket_policy == "salt":
-        # Cold buckets (the overwhelming majority) take this path too:
-        # n_sub=1, u=0, a single (0,0) block — no row multiplication,
-        # and the grouping distribution on key+(bu,bv) equals the
-        # unsalted key distribution, so the only cost is per-row
-        # expression work (xxhash64 + one-element explode) inside the
-        # same codegen stage. A hot/cold split was considered and
-        # declined: it doubles the plan for a constant-factor win the
-        # benches don't show.
-        n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size)) \
-            .cast("int")
-        b = (
-            b.withColumn("n_sub", n_sub)
-            .withColumn("u", F.pmod(F.xxhash64("id"),
-                                    F.col("n_sub")).cast("int"))
-            .drop("bucket_size")
-        )
-        blocks = F.transform(
-            F.sequence(F.lit(0), F.col("n_sub") - 1),
-            lambda k: F.struct(
-                F.least(F.col("u"), k).alias("bu"),
-                F.greatest(F.col("u"), k).alias("bv"),
-            ),
-        )
-        b = b.select(*key, "id", "val", "max_ham", "u",
-                     F.explode(blocks).alias("blk")) \
-             .select(*key, "id", "val", "max_ham", "u",
-                     F.col("blk.bu").alias("bu"), F.col("blk.bv").alias("bv"))
-    else:
-        # single (0,0) cell per bucket — the diagonal branch below
-        # enumerates its i<j pairs, identical to the former
-        # id_l < id_r self-join filter
-        b = (b.drop("bucket_size")
-             .withColumn("u", F.lit(0))
-             .withColumn("bu", F.lit(0))
-             .withColumn("bv", F.lit(0)))
+    blocks = F.transform(
+        F.sequence(F.lit(0), F.col("n_sub") - 1),
+        lambda k: F.struct(
+            F.least(F.col("u"), k).alias("bu"),
+            F.greatest(F.col("u"), k).alias("bv"),
+        ),
+    )
+    b = b.select(*key, "id", "val", "max_ham", "u",
+                 F.explode(blocks).alias("blk")) \
+         .select(*key, "id", "val", "max_ham", "u",
+                 F.col("blk.bu").alias("bu"), F.col("blk.bv").alias("bv"))
     jkey = key + ["bu", "bv"]
 
     # Pair generation by GROUPING (r6, guide §2.4), mirroring
@@ -299,48 +252,29 @@ def hamming_candidate_pairs(
 def candidate_pairs(
     buckets: DataFrame,
     max_bucket_size: int = 200,
-    hot_bucket_policy: str = "salt",
-    salt_cap: int = 20_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Self-join each (family, band, bucket) group → (id_l < id_r) pairs.
 
     Skew defusal (SURVEY.md §7 hard part (d); north rule "salted
     repartitioning"): a bucket of size s yields s(s-1)/2 pairs, so hot
     buckets (stop shingles, constant captions) would dominate the job
-    AND pin one task. Policy per bucket with size > max_bucket_size:
+    AND pin one task. A bucket with size > max_bucket_size is salted
+    into ceil(s/max) sub-buckets via xxhash64(id) — quadratic cost
+    drops to ~s*max/2, the work spreads across the cluster, and pairing
+    inside each sub-bucket is preserved (true dups in a hot bucket
+    nearly always share other, colder buckets too, so pair recall loss
+    is negligible — asserted by the recall tests). Buckets beyond
+    ``SALT_CAP`` are stop-patterns and are dropped outright.
 
-      * "salt": members are salted into ceil(s/max) sub-buckets via
-        xxhash64(id) — quadratic cost drops to ~s*max/2, the work
-        spreads across the cluster, and pairing inside each sub-bucket
-        is preserved (true dups in a hot bucket nearly always share
-        other, colder buckets too, so pair recall loss is negligible —
-        asserted by the recall tests). Buckets beyond ``salt_cap`` are
-        stop-patterns and are dropped outright.
-      * "drop": exclude the bucket entirely (the conservative mode).
-
-    Returns (pairs, dropped_buckets_metrics) — dropped/salted buckets
-    are reported, never silently eaten.
+    Returns (pairs, dropped_buckets_metrics) — dropped buckets are
+    reported, never silently eaten.
     """
-    key = ["family", "band", "bucket"]
-    sizes = buckets.groupBy(*key).agg(F.count("*").alias("bucket_size"))
-    hard_cap = max_bucket_size if hot_bucket_policy == "drop" else salt_cap
-    admitted = sizes.where(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= hard_cap)
-    )
-    dropped = sizes.where(F.col("bucket_size") > hard_cap)
-
-    # NB not broadcast: `admitted` has one row per distinct bucket —
-    # billions at corpus scale. Equi-join on the bucket key co-shuffles
-    # with the pairing join; AQE broadcasts it when it is in fact small.
-    b = buckets.join(admitted.select(*key, "bucket_size"), key)
-    if hot_bucket_policy == "salt":
-        n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size))
-        b = b.withColumn(
-            "salt", F.pmod(F.xxhash64("id"), n_sub).cast("int")
-        ).drop("bucket_size")
-        key = key + ["salt"]
-    else:
-        b = b.drop("bucket_size")
+    b, dropped = _admit(buckets)
+    n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size))
+    b = b.withColumn(
+        "salt", F.pmod(F.xxhash64("id"), n_sub).cast("int")
+    ).drop("bucket_size")
+    key = ["family", "band", "bucket", "salt"]
 
     # Pair generation by GROUPING, not self-joining (r6, guide §2.4):
     # collect each (sub-)bucket's member ids — bounded by the caps, so

@@ -368,8 +368,8 @@ def video_frame_phashes(df: DataFrame, id_col: str, bytes_col: str,
     codecs (byte-deterministic, zero dependencies); "jvm" decodes
     MJPEG chunks inside the JVM via the runtime-compiled
     jvm_decode_rgb UDF (sources/jvm_udf.py) — the scale path: ImageIO's
-    native-accelerated Huffman beats the Python LUT walk (A/B:
-    tools/bench_jvm_decode.py). Phash parity between backends is
+    native-accelerated Huffman beats the Python LUT walk (A/B in
+    BENCH/BASELINE.md). Phash parity between backends is
     test-bounded (IDCT rounding differs by a few bits at most —
     within every matching threshold the engine uses)."""
     decode_backend = resolve_decode_backend(df, decode_backend)

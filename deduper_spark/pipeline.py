@@ -12,13 +12,14 @@ reference's cross-run hash ledger (Deduper.kt:135-158).
 
 Shuffle inventory at scale (the plan you'd want on 1000 executors):
   * features: narrow (projection + Arrow UDFs) — zero shuffle;
-  * each LSH family: one groupBy(bucket) sizing pass + one co-located
-    self-join shuffle on (band, bucket), AQE skew-split;
+  * each LSH family: one groupBy(bucket) sizing pass + one grouping
+    shuffle on (band, bucket, salt) that enumerates the pairs;
   * verification: joins pair-side (small) to features hash-partitioned
     on id; the binary `bytes` column is projected ONLY into the PSNR
     pair join;
-  * CC: O(cluster diameter) rounds, each one shuffle on node id,
-    lineage truncated per round;
+  * CC: each partition contracts its edges locally (NumPy union-find),
+    then one task finishes the contracted forest — no shuffle rounds
+    unless the forest outgrows one task;
   * outputs: hash-partitioned writes, no global sort anywhere.
 """
 

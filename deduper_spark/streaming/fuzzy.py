@@ -56,7 +56,7 @@ rescan is gone):
     16-bit band value shared by 20k+ mutually-distant survivors),
     dropped from the join and METERED via ``on_metrics`` — a batch row
     whose only shared band is capped is admitted (bounded, reported
-    recall trade — identical policy to candidate_pairs' salt_cap).
+    recall trade — the same policy as candidate_pairs' SALT_CAP).
   * With ``ledger_table`` set, the ledger lives in a Spark table
     BUCKETED on (band, bucket) (sinks/writers.write_bucketed shape):
     the cold-path probe join consumes the table's bucket layout, so

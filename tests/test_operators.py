@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from deduper_spark.operators.cc import connected_components
 from deduper_spark.operators.lsh import (
-    band_buckets,
+    SALT_CAP,
     candidate_pairs,
     int64_band_buckets,
     union_pairs,
@@ -15,31 +15,20 @@ from deduper_spark.operators.lsh import (
 from deduper_spark.operators.suffix import containment_pairs
 
 
-def test_band_buckets_shape(spark):
-    df = spark.createDataFrame(
-        [("a", list(range(16))), ("b", list(range(16)))], ["id", "sig"]
-    )
-    bb = band_buckets(df, "id", "sig", bands=4, rows_per_band=4, family="mh")
-    rows = bb.collect()
-    assert len(rows) == 8  # 2 rows x 4 bands
-    # identical signatures → identical buckets per band
-    per_band = {(r["band"]): set() for r in rows}
-    for r in rows:
-        per_band[r["band"]].add(r["bucket"])
-    assert all(len(v) == 1 for v in per_band.values())
-
-
 def test_candidate_pairs_and_hot_bucket_cap(spark):
-    # 3 ids share a bucket; 5 ids share a hot bucket (cap=4 → dropped)
+    # 3 ids share a bucket; SALT_CAP + 1 ids share a stop-pattern
+    # bucket, which is dropped from pairing and reported
     rows = [("a", 0, 1, "f"), ("b", 0, 1, "f"), ("c", 0, 1, "f")]
-    rows += [(f"h{i}", 1, 2, "f") for i in range(5)]
-    bb = spark.createDataFrame(rows, ["id", "band", "bucket", "family"])
-    pairs, dropped = candidate_pairs(bb, max_bucket_size=4,
-                                     hot_bucket_policy="drop")
+    small = spark.createDataFrame(rows, ["id", "band", "bucket", "family"])
+    hot = spark.range(SALT_CAP + 1).select(
+        F.concat(F.lit("h"), F.col("id").cast("string")).alias("id"),
+        F.lit(1).cast("long").alias("band"), F.lit(2).cast("long").alias("bucket"),
+        F.lit("f").alias("family"))
+    pairs, dropped = candidate_pairs(small.unionByName(hot), max_bucket_size=4)
     got = {(r["id_l"], r["id_r"]) for r in pairs.collect()}
     assert got == {("a", "b"), ("a", "c"), ("b", "c")}
     d = dropped.collect()
-    assert len(d) == 1 and d[0]["bucket_size"] == 5
+    assert len(d) == 1 and d[0]["bucket_size"] == SALT_CAP + 1
 
 
 def test_int64_band_buckets_pigeonhole(spark):

@@ -33,14 +33,10 @@ def _union_find(n_nodes, edges):
 
 
 def test_cc_alternating_chain_converges_fast(spark):
-    """A 400-node chain: O(d) label propagation burns 400 rounds (fails
-    its max_iter=25 guard); connected_components closes it (its star
-    rounds, O(log d), are checked on the same chain in
+    """A 400-node chain closes within max_iter=15 (its star rounds,
+    O(log d), are checked on the same chain in
     test_cc_alternating_matches_union_find)."""
-    from deduper_spark.operators.cc import (
-        connected_components,
-        label_propagation_components,
-    )
+    from deduper_spark.operators.cc import connected_components
 
     ids = [f"n{i:05d}" for i in range(400)]
     edges = spark.createDataFrame(
@@ -49,9 +45,6 @@ def test_cc_alternating_chain_converges_fast(spark):
     got = {r["id"]: r["cluster_id"]
            for r in connected_components(edges, max_iter=15).collect()}
     assert got == {i: ids[0] for i in ids}
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        label_propagation_components(edges, max_iter=25)
 
 
 def _random_sparse(rng):
@@ -151,8 +144,7 @@ def test_simhash_doc_pairs_inline_predicate_and_bruteforce(spark):
     got = {(r["id_l"], r["id_r"], r["hamming"]) for r in pairs.collect()}
 
     feats = {r["id"]: r["simhash"]
-             for r in doc_features(df, "doc_id", "text", cfg,
-                                   with_minhash=False).collect()}
+             for r in doc_features(df, "doc_id", "text", cfg).collect()}
     keys = sorted(feats)
     expect = set()
     for i, a in enumerate(keys):

@@ -6,7 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from deduper_spark.config import DedupConfig
-from deduper_spark.operators.lsh import candidate_pairs
+from deduper_spark.operators.lsh import (
+    SALT_CAP,
+    candidate_pairs,
+    hamming_candidate_pairs,
+)
 from deduper_spark.pipeline import DedupPipeline
 from deduper_spark.synth import make_pdf
 
@@ -15,22 +19,22 @@ def test_salted_hot_bucket_bounded_pairs(spark):
     # one hot bucket of 100 members, cap 10 → salting into ~10 sub-buckets
     rows = [(f"x{i:03d}", 0, 7, "f") for i in range(100)]
     bb = spark.createDataFrame(rows, ["id", "band", "bucket", "family"])
-    pairs_salt, dropped_salt = candidate_pairs(bb, max_bucket_size=10,
-                                               hot_bucket_policy="salt")
+    pairs_salt, dropped_salt = candidate_pairs(bb, max_bucket_size=10)
     n_salt = pairs_salt.count()
     full = 100 * 99 // 2
     assert 0 < n_salt < full * 0.3  # quadratic blowup defused
     assert dropped_salt.count() == 0  # salted, not dropped
 
-    pairs_drop, dropped_drop = candidate_pairs(bb, max_bucket_size=10,
-                                               hot_bucket_policy="drop")
-    assert pairs_drop.count() == 0
-    assert dropped_drop.count() == 1
-
-    # beyond salt_cap → dropped even under salt policy
-    _, dropped_cap = candidate_pairs(bb, max_bucket_size=10,
-                                     hot_bucket_policy="salt", salt_cap=50)
-    assert dropped_cap.count() == 1
+    # beyond SALT_CAP → dropped and reported by both pair generators
+    cap = spark.range(SALT_CAP + 1).select(
+        F.col("id"), F.lit(0).alias("band"), F.lit(7).cast("long").alias("bucket"),
+        F.lit("f").alias("family"), F.lit(0).cast("long").alias("val"),
+        F.lit(0).alias("max_ham"))
+    for gen in (candidate_pairs, hamming_candidate_pairs):
+        pairs_cap, dropped_cap = gen(cap, max_bucket_size=10)
+        assert pairs_cap.count() == 0
+        assert [r["bucket_size"] for r in dropped_cap.collect()] == \
+            [SALT_CAP + 1]
 
 
 def test_salting_preserves_recall(spark):

@@ -133,6 +133,43 @@ def test_embedding_cosine_and_ann(spark):
             assert abs(r["cosine"] - 1.0) < 1e-6
 
 
+
+def test_lsh_topk_buckets_match_numpy_sign_projection(spark):
+    """lsh_topk's bucket id is the sign-random-projection signature
+    drawn from default_rng(seed): bit j set iff the vector lies on the
+    positive side of plane j. Pinned bit-for-bit against an inline
+    NumPy reference, and through lsh_topk's own output: with
+    probe_radius=0 and k = n, each query's neighbors are exactly the
+    other corpus rows in its reference bucket."""
+    import numpy as np
+
+    from deduper_spark.operators.ann import hyperplane_signatures_udf
+
+    dim, n_planes, seed, n = 8, 4, 7, 60
+    vecs = np.random.default_rng(1).standard_normal((n, dim))
+    planes = np.random.default_rng(seed).standard_normal((dim, n_planes))
+    bits = (vecs @ planes) > 0
+    want = (bits.astype(np.int64) << np.arange(n_planes)).sum(axis=1)
+
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>")
+    sig = hyperplane_signatures_udf(dim, n_planes, 1, seed)
+    got = {r["vec_id"]: r["b"] for r in
+           df.select("vec_id", sig("embedding")[0].alias("b")).collect()}
+    assert got == {i: int(b) for i, b in enumerate(want)}
+
+    nbrs = {}
+    for r in lsh_topk(df, df, dim=dim, k=n, n_planes=n_planes, seed=seed,
+                      probe_radius=0).collect():
+        nbrs.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    expect = {}
+    for i in range(n):
+        same = {j for j in range(n) if j != i and want[j] == want[i]}
+        if same:
+            expect[i] = same
+    assert nbrs == expect
+
 def test_multimodal_plumbing(spark):
     from deduper_spark.synth import make_pdf
 

@@ -1,5 +1,6 @@
 """One-level pipeline profile: stage-by-stage wall clock at a given
-parallelism (bench_scaling's WORKER, single run, full metrics printed).
+parallelism (single run, full metrics printed). For repeated,
+seeded measurements use perfbench/run.py.
 
 Usage: python tools/profile_pipeline.py [n] [cpus]
 """
@@ -44,7 +45,7 @@ def main() -> None:
         _warm("id")).write.format("noop").mode("overwrite").save()
 
     # steady-state warmup (JIT/codegen/Arrow init — one-time cluster
-    # costs, excluded from the timed window; see bench_scaling.py)
+    # costs, excluded from the timed window)
     _w = make_df(spark, 43, 1000).persist()
     _w.count()
     DedupPipeline(

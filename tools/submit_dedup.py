@@ -50,7 +50,7 @@ def main() -> None:
                          "measures steady state (one-time JVM codegen / "
                          "Arrow init / Python-worker fork are startup "
                          "costs a long-lived cluster pays once, not "
-                         "per job — same exclusion as bench_scaling)")
+                         "per job)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
