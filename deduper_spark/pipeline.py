@@ -1,8 +1,16 @@
 """DedupPipeline — the end-to-end near-duplicate detection & clustering DAG.
 
 Lifecycle (Spark-first equivalent of Deduper.dedupe, Deduper.kt:429-549):
-    features → signatures → LSH candidates → verification →
-    connected components → clusters / survivors / ledger / report
+    features → signatures → LSH candidates → verification → edges →
+    connected components → clusters / survivors / ledger / report →
+    sinks
+
+In psnr_mode="audit" every family plans as ONE edges query (AQE runs
+its independent branches concurrently); the PSNR audit then samples
+the phash pairs of the edges checkpoint in its own driver thread,
+alongside CC and the report, and is joined before any sink is
+written. The sinks are written concurrently and counted back in one
+query (sinks/writers.py).
 
 Every stage is optionally checkpointed to parquet under
 ``checkpoint_dir/run_id/<stage>`` (Iceberg tables on a real cluster)
@@ -16,11 +24,16 @@ Shuffle inventory at scale (the plan you'd want on 1000 executors):
     shuffle on (band, bucket, salt) that enumerates the pairs;
   * verification: joins pair-side (small) to features hash-partitioned
     on id; the binary `bytes` column is projected ONLY into the PSNR
-    pair join;
+    pair join (full mode: the phash-only pairs; audit mode: a bounded
+    sample of the edges checkpoint's phash pairs);
   * CC: each partition contracts its edges locally (NumPy union-find),
     then one task finishes the contracted forest — no shuffle rounds
     unless the forest outgrows one task;
-  * outputs: hash-partitioned writes, no global sort anywhere.
+  * report: one groupBy(cluster_id) feeds the counters, the group
+    detail and the dupes sink; the distinct-hash count rides the same
+    collect;
+  * outputs: hash-partitioned writes, no global sort anywhere; one
+    union read-back reconciles every sink.
 """
 
 from __future__ import annotations
@@ -28,11 +41,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+from pyspark.util import inheritable_thread_target
 
 from deduper_spark.config import DedupConfig
 from deduper_spark.errors import MISSING_PATH, absent_state
@@ -102,8 +117,10 @@ class DedupPipeline:
         ``lazy=True`` (r6) defers materialization to the stage's first
         consuming action — safe ONLY when that first action references
         the stage exactly once (a multi-reference consumer would race
-        duplicate computation into the cache). Ignored when a
-        checkpoint_dir requires a durable parquet write."""
+        duplicate computation into the cache), and only when that action
+        completes before two driver threads read the stage (run()'s
+        concurrent sinks and PSNR audit would race the same way).
+        Ignored when a checkpoint_dir requires a durable parquet write."""
         path = self._ckpt_path(stage)
         t0 = time.time()
         if path:
@@ -222,7 +239,14 @@ class DedupPipeline:
             ~1e-3x candidate set is the only thing that joins the
             shingle arrays for exact Jaccard.
           * family results merge in union_pairs (one groupBy over
-            confirmed pairs only)."""
+            confirmed pairs only).
+
+        Pixel fidelity: psnr_mode="full" pins the fuzzy pairs and keeps a
+        pair only phash confirmed iff its decoded PSNR passes. In
+        psnr_mode="audit" nothing here runs an action: the exact, fuzzy
+        and substring branches form one edges query, and run() audits a
+        sample of its phash pairs after checkpointing it
+        (``_psnr_audit``)."""
         cfg = self.config.fuzzy
         verified: list[DataFrame] = []
 
@@ -281,12 +305,17 @@ class DedupPipeline:
 
         if fuzzy_parts:
             fuzzy_ok = union_pairs(*fuzzy_parts)
-            if "phash" in self.families and self.verify_pixels:
-                # fuzzy_ok feeds TWO consumers in either mode (audit
-                # aggregation + edges, or the phash_only/others branch
-                # split) — pin it once or the candidate self-join (the
-                # single most expensive shuffle in the pipeline) runs
-                # twice end-to-end
+            if self._pixel_check() != "full":
+                # no pixel check here (audit mode: run() samples the
+                # phash pairs off the edges checkpoint), so fuzzy_ok has
+                # this one consumer
+                verified.append(fuzzy_ok)
+            else:
+                # full mode: pairs confirmed ONLY by phash need the
+                # pixel check; pairs any other family confirmed stand.
+                # fuzzy_ok feeds both branches of that split — pin it
+                # once or the candidate self-join (the single most
+                # expensive shuffle in the pipeline) runs twice
                 t_cand = time.time()
                 fuzzy_ok = fuzzy_ok.localCheckpoint()
                 self.metrics.append(
@@ -296,67 +325,18 @@ class DedupPipeline:
                 img = images.select(
                     F.col(self.config.order_col).alias("id"), "bytes"
                 )
-                if cfg.psnr_mode == "audit":
-                    verified.append(fuzzy_ok)
-                    ham_ok = fuzzy_ok.where(
-                        F.array_contains("families", "phash")
-                    )
-                    # deterministic sample cap: decode cost and the
-                    # bytes-pair shuffle stay bounded at any corpus size;
-                    # a violation in the sample fails the run. The sample
-                    # is a PURE predicate — pmod(xxhash64(pair)) below a
-                    # cutoff sized from the candidate count — so two runs
-                    # at different partitionings audit the IDENTICAL pair
-                    # set (a .limit(n) cut would take whichever rows
-                    # arrive first). ham_ok scans the pinned fuzzy_ok, so
-                    # the sizing count is a cheap cached-scan job.
-                    n_ham = ham_ok.count()
-                    cut = min(
-                        1_000_000,
-                        (1_000_000 * cfg.psnr_audit_pairs)
-                        // max(n_ham, 1) + 1,
-                    )
-                    sampled = ham_ok.where(
-                        F.pmod(F.xxhash64("id_l", "id_r"), F.lit(1_000_000))
-                        < F.lit(cut)
-                    )
-                    scored = verify_psnr(sampled, img, float("-inf"))
-                    t_aud = time.time()
-                    row = scored.agg(
-                        F.count("*").alias("sampled"),
-                        F.sum((F.col("psnr") >= cfg.psnr_threshold_db)
-                              .cast("long")).alias("passed"),
-                    ).collect()[0]
-                    aud_sec = round(time.time() - t_aud, 3)
-                    n_sampled = row["sampled"]
-                    n_passed = row["passed"] or 0
-                    self.metrics.append(
-                        {"stage": "psnr_audit", "sampled": n_sampled,
-                         "passed": n_passed, "sec": aud_sec}
-                    )
-                    if n_passed < n_sampled:
-                        raise RuntimeError(
-                            f"PSNR fidelity audit failed: {n_sampled - n_passed}"
-                            f" of {n_sampled} sampled pairs below "
-                            f"{cfg.psnr_threshold_db} dB"
-                        )
-                else:
-                    # full mode: pairs confirmed ONLY by phash need the
-                    # pixel check; pairs any other family confirmed stand
-                    phash_only = fuzzy_ok.where(
-                        F.array_contains("families", "phash")
-                        & (F.size("families") == 1)
-                    )
-                    others = fuzzy_ok.where(
-                        ~(F.array_contains("families", "phash")
-                          & (F.size("families") == 1))
-                    )
-                    confirmed = verify_psnr(
-                        phash_only, img, cfg.psnr_threshold_db
-                    ).drop("psnr")
-                    verified.append(others.unionByName(confirmed))
-            else:
-                verified.append(fuzzy_ok)
+                phash_only = fuzzy_ok.where(
+                    F.array_contains("families", "phash")
+                    & (F.size("families") == 1)
+                )
+                others = fuzzy_ok.where(
+                    ~(F.array_contains("families", "phash")
+                      & (F.size("families") == 1))
+                )
+                confirmed = verify_psnr(
+                    phash_only, img, cfg.psnr_threshold_db
+                ).drop("psnr")
+                verified.append(others.unionByName(confirmed))
 
         if "substring" in self.families:
             verified.append(
@@ -368,6 +348,47 @@ class DedupPipeline:
         if not verified:
             raise ValueError("no dedup families enabled")
         return union_pairs(*verified)
+
+    def _pixel_check(self) -> str | None:
+        """How phash pairs are pixel-verified: "full" (candidate_edges
+        decodes every pair only phash confirmed), "audit" (run() decodes
+        a sample of the edges checkpoint's phash pairs) or None (no
+        phash family, or verify_pixels=False)."""
+        if "phash" not in self.families or not self.verify_pixels:
+            return None
+        return "audit" if self.config.fuzzy.psnr_mode == "audit" else "full"
+
+    def _psnr_audit(self, edges: DataFrame, images: DataFrame) -> dict:
+        """psnr_mode="audit": decode a deterministic sample of the phash
+        pairs in the edges checkpoint — exactly the pair set the phash
+        family confirmed — and return the audit's metrics entry.
+
+        The sample cap keeps the decode cost and the bytes-pair shuffle
+        bounded at any corpus size. The sample is a PURE predicate —
+        pmod(xxhash64(pair)) below a cutoff sized from the phash pair
+        count — so two runs at different partitionings audit the
+        IDENTICAL pair set (a .limit(n) cut would take whichever rows
+        arrive first). Both actions scan the pinned edges."""
+        cfg = self.config.fuzzy
+        ham_ok = edges.where(F.array_contains("families", "phash"))
+        n_ham = ham_ok.count()
+        cut = min(
+            1_000_000,
+            (1_000_000 * cfg.psnr_audit_pairs) // max(n_ham, 1) + 1,
+        )
+        sampled = ham_ok.where(
+            F.pmod(F.xxhash64("id_l", "id_r"), F.lit(1_000_000)) < F.lit(cut)
+        )
+        img = images.select(F.col(self.config.order_col).alias("id"), "bytes")
+        t_aud = time.time()
+        row = verify_psnr(sampled, img, float("-inf")).agg(
+            F.count("*").alias("sampled"),
+            F.sum((F.col("psnr") >= cfg.psnr_threshold_db)
+                  .cast("long")).alias("passed"),
+        ).collect()[0]
+        return {"stage": "psnr_audit", "sampled": row["sampled"],
+                "passed": row["passed"] or 0,
+                "sec": round(time.time() - t_aud, 3)}
 
     def _record_dropped(self, spark: SparkSession, family: str,
                         dropped: DataFrame) -> None:
@@ -456,6 +477,90 @@ class DedupPipeline:
         # dedup and re-emit previously-seen rows as survivors
         return seen.select(F.col("hash").alias("exact_hash")).distinct()
 
+    def _cluster_and_report(
+        self, spark: SparkSession, df: DataFrame, feats: DataFrame,
+        edges: DataFrame, pre_rows: int, pre_groups: int, pre_hashes: int,
+        pre_group_detail: DataFrame | None,
+    ) -> tuple[DataFrame, DataFrame, DedupeReport, int]:
+        """CC over the edges, then the report: returns (clusters,
+        dupe_groups, report, rows clustered).
+
+        ONE per-cluster aggregate feeds every report counter, the group
+        detail and the dupes sink, and one collect() computes the
+        counters and the distinct-hash count together. That collect
+        materializes both lazy checkpoints (clusters and the
+        aggregate) before the concurrent sinks read them."""
+        t_cc = time.time()
+        # union_pairs ends in a groupBy(id_l, id_r): edges are distinct
+        labeled = connected_components(edges, nodes=feats.select("id"),
+                                       edges_distinct=True)
+        self.metrics.append(
+            {"stage": "cc_rounds", "sec": round(time.time() - t_cc, 3)}
+        )
+        clusters = self._materialize(
+            spark,
+            "clusters",
+            labeled.select(F.col("id").alias("image_id"), "cluster_id"),
+            # the report's collect below is the first action and reads
+            # clusters exactly once (through the per-cluster aggregate)
+            # — it materializes the checkpoint, saving a dedicated job
+            lazy=True,
+        )
+
+        t_rep = time.time()
+        groups = clusters.groupBy("cluster_id").agg(
+            F.sort_array(F.collect_list("image_id")).alias("member_ids"),
+            F.count("*").alias("n_members"),
+            F.sum((F.col("image_id") == F.col("cluster_id")).cast("long"))
+            .alias("n_survivors"),
+        ).localCheckpoint(eager=False)
+        stats = groups.agg(
+            # coalesce: an all-seen incremental run clusters ZERO rows
+            F.coalesce(F.sum("n_members"), F.lit(0)).alias("n_records"),
+            F.coalesce(F.sum("n_survivors"), F.lit(0)).alias("n_survivors"),
+            # clusters that own at least one non-survivor row == number
+            # of dupe groups (reference distinctDupeCount)
+            F.count_if(F.col("n_members") > F.col("n_survivors"))
+            .alias("n_dupe_groups"),
+        ).crossJoin(
+            feats.agg(F.count_distinct("exact_hash").alias("hash_count"))
+        ).collect()[0]
+        n_records = stats["n_records"]          # fresh rows (clustered)
+        n_groups = stats["n_dupe_groups"]
+        # preloaded-seen rows are dupes and their hashes count
+        # (reference: DeduperTest.kt:408-412)
+        report = DedupeReport(
+            record_count=n_records + pre_rows,
+            hash_columns=self.hash_keys(df),
+            columns_found=df.columns,
+            dupe_count=(n_records - stats["n_survivors"]) + pre_rows,
+            distinct_dupe_count=n_groups + pre_groups,
+            hash_count=stats["hash_count"] + pre_hashes,
+            success=True,
+        )
+
+        dupe_groups = groups.where(F.col("n_members") > 1).select(
+            "cluster_id", "member_ids", "n_members",
+            F.col("cluster_id").alias("survivor_id"),
+        )
+        if pre_group_detail is not None:
+            dupe_groups = dupe_groups.unionByName(pre_group_detail)
+        # group detail (reference report.dupes, Deduper.kt:42-60) —
+        # cap-limited exactly like the exact path's build_report;
+        # dupe_groups now includes preloaded-hit groups, so the cap
+        # gates on the TOTAL group count
+        if 0 < (n_groups + pre_groups) <= 1000:
+            for r in dupe_groups.collect():
+                report.dupes[r["cluster_id"]] = {
+                    "member_ids": list(r["member_ids"]),
+                    "survivor_id": r["survivor_id"],
+                    "n_members": r["n_members"],
+                }
+        self.metrics.append(
+            {"stage": "report", "sec": round(time.time() - t_rep, 3)}
+        )
+        return clusters, dupe_groups, report, n_records
+
     def run(self, spark: SparkSession, df: DataFrame) -> PipelineResult:
         t0 = time.time()
         self.metrics = []
@@ -515,41 +620,32 @@ class DedupPipeline:
         edges = self._materialize(
             spark, "edges", self.candidate_edges(spark, feats, df)
         )
-        t_cc = time.time()
-        # union_pairs ends in a groupBy(id_l, id_r): edges are distinct
-        labeled = connected_components(edges, nodes=feats.select("id"),
-                                       edges_distinct=True)
-        self.metrics.append(
-            {"stage": "cc_rounds", "sec": round(time.time() - t_cc, 3)}
-        )
-        clusters = self._materialize(
-            spark,
-            "clusters",
-            labeled.select(F.col("id").alias("image_id"), "cluster_id"),
-            # the report's cstats aggregation below is the first action
-            # and references clusters exactly once — it materializes
-            # the checkpoint, saving a dedicated job (r6)
-            lazy=True,
-        )
+        # the PSNR audit reads only the edges checkpoint and the images:
+        # one driver thread runs it alongside CC and the report, and it
+        # is joined before any sink is written
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            audit = pool.submit(
+                inheritable_thread_target(spark)(self._psnr_audit), edges, df
+            ) if self._pixel_check() == "audit" else None
+            clusters, dupe_groups, report, n_records = self._cluster_and_report(
+                spark, df, feats, edges, pre_rows, pre_groups, pre_hashes,
+                pre_group_detail,
+            )
+            if audit is not None:
+                entry = audit.result()
+                self.metrics.append(entry)
+                if entry["passed"] < entry["sampled"]:
+                    raise RuntimeError(
+                        f"PSNR fidelity audit failed: "
+                        f"{entry['sampled'] - entry['passed']} of "
+                        f"{entry['sampled']} sampled pairs below "
+                        f"{self.config.fuzzy.psnr_threshold_db} dB"
+                    )
 
         survivor_ids = clusters.where(
             F.col("image_id") == F.col("cluster_id")
         ).select(F.col("image_id").alias(self.config.order_col))
         survivors = df.join(survivor_ids, self.config.order_col, "left_semi")
-
-        dupe_groups = (
-            clusters.groupBy("cluster_id")
-            .agg(
-                F.sort_array(F.collect_list("image_id")).alias("member_ids"),
-                F.count("*").alias("n_members"),
-            )
-            .withColumn("survivor_id", F.col("cluster_id"))
-            .where(F.col("n_members") > 1)
-        )
-        if pre_group_detail is not None:
-            dupe_groups = dupe_groups.select(
-                "cluster_id", "member_ids", "n_members", "survivor_id"
-            ).unionByName(pre_group_detail)
 
         ledger = feats.groupBy(F.col("exact_hash").alias("hash")).agg(
             F.min("id").alias("first_id")
@@ -559,54 +655,6 @@ class DedupPipeline:
                     F.min_by(F.struct("id", "caption", "phash"), F.col("id"))
                 ).alias("json_row")
             )
-        )
-
-        # ---- report (two small aggregations over checkpointed outputs) --
-        t_rep = time.time()
-        cstats = clusters.agg(
-            F.count("*").alias("n_records"),
-            # coalesce: an all-seen incremental run clusters ZERO rows
-            F.coalesce(
-                F.sum((F.col("image_id") == F.col("cluster_id")).cast("long")),
-                F.lit(0),
-            ).alias("n_survivors"),
-            # distinct clusters that own at least one non-survivor row
-            # == number of dupe groups (reference distinctDupeCount)
-            F.count_distinct(
-                F.when(F.col("image_id") != F.col("cluster_id"),
-                       F.col("cluster_id"))
-            ).alias("n_dupe_groups"),
-        ).collect()[0]
-        hstats = feats.agg(
-            F.count_distinct("exact_hash").alias("hash_count")
-        ).collect()[0]
-        n_records = cstats["n_records"]          # fresh rows (clustered)
-        n_survivors = cstats["n_survivors"]
-        n_groups = cstats["n_dupe_groups"]
-        # preloaded-seen rows are dupes and their hashes count
-        # (reference: DeduperTest.kt:408-412)
-        report = DedupeReport(
-            record_count=n_records + pre_rows,
-            hash_columns=self.hash_keys(df),
-            columns_found=df.columns,
-            dupe_count=(n_records - n_survivors) + pre_rows,
-            distinct_dupe_count=n_groups + pre_groups,
-            hash_count=hstats["hash_count"] + pre_hashes,
-            success=True,
-        )
-        # group detail (reference report.dupes, Deduper.kt:42-60) —
-        # cap-limited exactly like the exact path's build_report;
-        # dupe_groups now includes preloaded-hit groups, so the cap
-        # gates on the TOTAL group count
-        if 0 < (n_groups + pre_groups) <= 1000:
-            for r in dupe_groups.collect():
-                report.dupes[r["cluster_id"]] = {
-                    "member_ids": list(r["member_ids"]),
-                    "survivor_id": r["survivor_id"],
-                    "n_members": r["n_members"],
-                }
-        self.metrics.append(
-            {"stage": "report", "sec": round(time.time() - t_rep, 3)}
         )
 
         result = PipelineResult(

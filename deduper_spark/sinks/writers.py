@@ -8,13 +8,19 @@ commits here). What survives:
     ledger (schemas from persistors/Persistors.kt:343-350, 415-420);
   * delete-if-exists -> mode("overwrite") (O23);
   * reconciliation (O27) — the reference logs mismatches
-    (consumers/BaseConsumer.kt:106-117); THIS engine fails hard.
+    (consumers/BaseConsumer.kt:106-117); THIS engine fails hard. Both
+    writers share one helper: the sinks are written concurrently, then
+    counted back from storage in a single query.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from deduper_spark.operators.exact import ExactDedupResult
 from deduper_spark.report import DedupeReport
@@ -87,10 +93,48 @@ def write_table(df: DataFrame, ident_or_path: str, overwrite: bool = True) -> No
     write_parquet(df, ident_or_path, overwrite)
 
 
-def _count_back(spark: SparkSession, path: str) -> int:
-    return spark.read.parquet(path).count() if "/" in path else (
-        spark.read.table(path).count()
-    )
+def _write_reconciled(
+    spark: SparkSession,
+    checks: dict[str, tuple[str | None, DataFrame, int]],
+    reconcile: bool = True,
+) -> dict[str, int]:
+    """Write each configured sink (``name -> (path, df, expected
+    rows)``; a None path is skipped), then reconcile the rows in
+    storage against ``expected``; a mismatch raises.
+
+    The sinks are independent, so they are written concurrently, one
+    driver thread each; the threads inherit the caller's job group,
+    description and tags, so every job stays attributable to the
+    caller. Every frame a sink reads must already be materialized: a
+    lazily checkpointed frame read by two threads would be computed
+    twice. All sinks are then counted back in ONE query (a union of the
+    stored sinks grouped by sink name) read with the known schema, so
+    no footer-inference job runs."""
+    sinks = {name: c for name, c in checks.items() if c[0]}
+    if not sinks:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(write_table),
+                               df, path) for path, df, _ in sinks.values()]
+    for f in futures:
+        f.result()  # re-raise the first failed write
+
+    stored = [
+        (spark.read.schema(df.schema).parquet(path) if "/" in path
+         else spark.read.table(path)).select(F.lit(name).alias("sink"))
+        for name, (path, df, _) in sinks.items()
+    ]
+    counts = {r["sink"]: r["count"] for r in
+              reduce(DataFrame.unionByName, stored).groupBy("sink").count()
+              .collect()}
+    written = {name: counts.get(name, 0) for name in sinks}
+    for name, (_, _, expected) in sinks.items():
+        if reconcile and written[name] != expected:
+            raise ReconciliationError(
+                f"sink '{name}' wrote {written[name]} rows, report expects "
+                f"{expected}"
+            )
+    return written
 
 
 def write_pipeline_outputs(
@@ -123,19 +167,7 @@ def write_pipeline_outputs(
         "hashes": (config.hashes_path, result.hash_ledger,
                    report.hash_count - preloaded_hashes),
     }
-    written: dict[str, int] = {}
-    for name, (path, df, expected) in checks.items():
-        if not path:
-            continue
-        write_table(df, path)
-        n = _count_back(spark, path)
-        written[name] = n
-        if reconcile and n != expected:
-            raise ReconciliationError(
-                f"pipeline sink '{name}' wrote {n} rows, report expects "
-                f"{expected}"
-            )
-    return written
+    return _write_reconciled(spark, checks, reconcile)
 
 
 def write_dedup_outputs(
@@ -153,20 +185,9 @@ def write_dedup_outputs(
     (DeduperDupeConsumer.kt:33-35), hashes == hashCount
     (DeduperHashConsumer.kt:34-36). Mismatch raises (fail-hard upgrade
     over the reference's log-only behavior)."""
-    written: dict[str, int] = {}
     checks = {
         "target": (target_path, result.survivors, report.surviving_count),
         "dupes": (dupes_path, result.dupe_groups, report.distinct_dupe_count),
         "hashes": (hashes_path, result.hash_ledger, report.hash_count),
     }
-    for name, (path, df, expected) in checks.items():
-        if not path:
-            continue
-        write_table(df, path)
-        n = _count_back(spark, path)
-        written[name] = n
-        if reconcile and n != expected:
-            raise ReconciliationError(
-                f"sink '{name}' wrote {n} rows, report expects {expected}"
-            )
-    return written
+    return _write_reconciled(spark, checks, reconcile)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +12,7 @@ from deduper_spark.sinks.writers import (
     ReconciliationError,
     write_csv,
     write_dedup_outputs,
+    write_pipeline_outputs,
 )
 from deduper_spark.sources.readers import (
     read_csv_as_strings,
@@ -69,6 +72,42 @@ def test_write_outputs_and_reconcile(spark, tmp_path):
     with pytest.raises(ReconciliationError):
         write_dedup_outputs(spark, res, rep,
                             target_path=str(tmp_path / "target2"))
+
+
+def test_pipeline_sinks_reconcile_through_one_read_back(spark, tmp_path):
+    """All four pipeline sinks are counted back from storage by one
+    query; the counts equal the report's, and a poisoned report still
+    fails hard, naming the sink that disagrees."""
+    from deduper_spark.config import DedupConfig
+    from deduper_spark.pipeline import DedupPipeline
+    from deduper_spark.synth import make_pdf
+
+    df = spark.createDataFrame(make_pdf(42, 50))
+    res = DedupPipeline(DedupConfig(include_json=False),
+                        collect_metrics=False).run(spark, df)
+    rep = res.report
+
+    def sinks(tag: str) -> DedupConfig:
+        return DedupConfig(**{f"{k}_path": str(tmp_path / tag / k) for k in
+                              ("target", "dupes", "hashes", "clusters")})
+
+    cfg = sinks("ok")
+    written = write_pipeline_outputs(spark, res, rep, cfg,
+                                     n_fresh=rep.record_count)
+    assert written == {"target": rep.surviving_count,
+                       "clusters": rep.record_count,
+                       "dupes": rep.distinct_dupe_count,
+                       "hashes": rep.hash_count}
+    for name, n in written.items():
+        assert spark.read.parquet(getattr(cfg, f"{name}_path")).count() == n
+
+    poisoned = dataclasses.replace(rep, hash_count=rep.hash_count + 1)
+    with pytest.raises(ReconciliationError, match="sink 'hashes' wrote"):
+        write_pipeline_outputs(spark, res, poisoned, sinks("bad_hashes"),
+                               n_fresh=rep.record_count)
+    with pytest.raises(ReconciliationError, match="sink 'clusters' wrote"):
+        write_pipeline_outputs(spark, res, rep, sinks("bad_clusters"),
+                               n_fresh=rep.record_count + 1)
 
 
 def test_stream_dedup_incremental(spark, tmp_path):

@@ -121,3 +121,35 @@ def test_int64_band_buckets_fullwidth_at_hamming_zero(spark):
     got16 = {(r["id_l"], r["id_r"]) for r in p16.collect()}
 
     assert got0 == got16 == {("r0", "r1"), ("r3", "r4")}
+
+
+def test_verify_jaccard_matches_set_jaccard(spark):
+    """verify_jaccard's value is |A ∩ B| / max(|A ∪ B|, 1) on the
+    distinct-valued arrays shingle_hashes_expr emits, empty arrays
+    included, and the threshold keeps exactly the pairs at or above it."""
+    import random
+
+    from deduper_spark.operators.verify import verify_jaccard
+
+    rng = random.Random(7)
+    sets = [[], []] + [rng.sample(range(40), rng.randint(0, 12))
+                       for _ in range(60)]
+    feats = spark.createDataFrame(
+        [(f"d{i}", s) for i, s in enumerate(sets)],
+        "id string, sh array<long>")
+    pairs = spark.createDataFrame(
+        [(f"d{i}", f"d{j}", ["minhash"])
+         for i in range(len(sets)) for j in range(i + 1, len(sets))
+         if i < 2 or rng.random() < 0.3],
+        "id_l string, id_r string, families array<string>")
+    want = {}
+    for r in pairs.collect():
+        a, b = set(sets[int(r["id_l"][1:])]), set(sets[int(r["id_r"][1:])])
+        want[(r["id_l"], r["id_r"])] = len(a & b) / max(len(a | b), 1)
+    got = {(r["id_l"], r["id_r"]): r["jaccard"]
+           for r in verify_jaccard(pairs, feats, "sh", 0.0).collect()}
+    assert got[("d0", "d1")] == 0.0  # both empty
+    assert got == want
+    kept = {(r["id_l"], r["id_r"])
+            for r in verify_jaccard(pairs, feats, "sh", 0.25).collect()}
+    assert kept == {k for k, j in want.items() if j >= 0.25}

@@ -150,3 +150,59 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     resumed = [s for s in p2.metrics if s.get("resumed")]
     assert {s["stage"] for s in resumed} == {"features", "edges", "clusters"}
     assert r2.clusters.count() == n1
+
+
+def _probe_job_ids(spark, group: str) -> list[int]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    spark.range(1).count()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+    return ids
+
+
+def _sink_paths(tmp_path) -> dict[str, str]:
+    return {f"{k}_path": str(tmp_path / k)
+            for k in ("target", "dupes", "hashes", "clusters")}
+
+
+def test_every_job_of_a_run_is_in_the_callers_job_group(spark, corpus,
+                                                         tmp_path):
+    """The PSNR audit thread and the concurrent sink writers inherit the
+    caller's job group, so stage accounting by job group (bench.py,
+    perfbench's Tracer) sees every job of the run."""
+    sc = spark.sparkContext
+    before = max(_probe_job_ids(spark, "probe-before"))
+    cfg = DedupConfig(fuzzy=FuzzyConfig(psnr_mode="audit"),
+                      **_sink_paths(tmp_path))
+    pipe = DedupPipeline(cfg, collect_metrics=False)
+    sc.setJobGroup("g", "pipeline run")
+    try:
+        pipe.run(spark, corpus)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    after = min(_probe_job_ids(spark, "probe-after"))
+    run_jobs = set(range(before + 1, after))
+    assert any(m["stage"] == "psnr_audit" for m in pipe.metrics)
+    assert any(m["stage"] == "sinks" for m in pipe.metrics)
+    assert run_jobs
+    assert run_jobs <= set(sc.statusTracker().getJobIdsForGroup("g"))
+
+
+def test_failed_psnr_audit_fails_the_run_and_writes_no_sink(spark, corpus,
+                                                            tmp_path):
+    """No decoded pair reaches 1e9 dB except byte-identical copies
+    (PSNR inf), so the corpus's lossy re-encodes fail the audit: the
+    run raises before any sink is written."""
+    sinks = _sink_paths(tmp_path)
+    cfg = DedupConfig(fuzzy=FuzzyConfig(psnr_mode="audit",
+                                        psnr_threshold_db=1e9), **sinks)
+    with pytest.raises(RuntimeError, match="PSNR fidelity audit failed"):
+        DedupPipeline(cfg, collect_metrics=False).run(spark, corpus)
+    assert not any(os.path.exists(p) for p in sinks.values())
+
+    res = DedupPipeline(cfg, collect_metrics=False).run_safe(spark, corpus)
+    assert res.report.success is False
+    assert not any(os.path.exists(p) for p in sinks.values())
