@@ -10,7 +10,8 @@ its independent branches concurrently); the PSNR audit then samples
 the phash pairs of the edges checkpoint in its own driver thread,
 alongside CC and the report, and is joined before any sink is
 written. The sinks are written concurrently and counted back in one
-query (sinks/writers.py).
+query, the hashes ledger last, once the others reconcile
+(sinks/writers.py).
 
 Every stage is optionally checkpointed to parquet under
 ``checkpoint_dir/run_id/<stage>`` (Iceberg tables on a real cluster)
@@ -33,7 +34,8 @@ Shuffle inventory at scale (the plan you'd want on 1000 executors):
     detail and the dupes sink; the distinct-hash count rides the same
     collect;
   * outputs: hash-partitioned writes, no global sort anywhere; one
-    union read-back reconciles every sink.
+    union read-back reconciles every sink but the ledger, which is
+    written and counted after them.
 """
 
 from __future__ import annotations
@@ -477,90 +479,6 @@ class DedupPipeline:
         # dedup and re-emit previously-seen rows as survivors
         return seen.select(F.col("hash").alias("exact_hash")).distinct()
 
-    def _cluster_and_report(
-        self, spark: SparkSession, df: DataFrame, feats: DataFrame,
-        edges: DataFrame, pre_rows: int, pre_groups: int, pre_hashes: int,
-        pre_group_detail: DataFrame | None,
-    ) -> tuple[DataFrame, DataFrame, DedupeReport, int]:
-        """CC over the edges, then the report: returns (clusters,
-        dupe_groups, report, rows clustered).
-
-        ONE per-cluster aggregate feeds every report counter, the group
-        detail and the dupes sink, and one collect() computes the
-        counters and the distinct-hash count together. That collect
-        materializes both lazy checkpoints (clusters and the
-        aggregate) before the concurrent sinks read them."""
-        t_cc = time.time()
-        # union_pairs ends in a groupBy(id_l, id_r): edges are distinct
-        labeled = connected_components(edges, nodes=feats.select("id"),
-                                       edges_distinct=True)
-        self.metrics.append(
-            {"stage": "cc_rounds", "sec": round(time.time() - t_cc, 3)}
-        )
-        clusters = self._materialize(
-            spark,
-            "clusters",
-            labeled.select(F.col("id").alias("image_id"), "cluster_id"),
-            # the report's collect below is the first action and reads
-            # clusters exactly once (through the per-cluster aggregate)
-            # — it materializes the checkpoint, saving a dedicated job
-            lazy=True,
-        )
-
-        t_rep = time.time()
-        groups = clusters.groupBy("cluster_id").agg(
-            F.sort_array(F.collect_list("image_id")).alias("member_ids"),
-            F.count("*").alias("n_members"),
-            F.sum((F.col("image_id") == F.col("cluster_id")).cast("long"))
-            .alias("n_survivors"),
-        ).localCheckpoint(eager=False)
-        stats = groups.agg(
-            # coalesce: an all-seen incremental run clusters ZERO rows
-            F.coalesce(F.sum("n_members"), F.lit(0)).alias("n_records"),
-            F.coalesce(F.sum("n_survivors"), F.lit(0)).alias("n_survivors"),
-            # clusters that own at least one non-survivor row == number
-            # of dupe groups (reference distinctDupeCount)
-            F.count_if(F.col("n_members") > F.col("n_survivors"))
-            .alias("n_dupe_groups"),
-        ).crossJoin(
-            feats.agg(F.count_distinct("exact_hash").alias("hash_count"))
-        ).collect()[0]
-        n_records = stats["n_records"]          # fresh rows (clustered)
-        n_groups = stats["n_dupe_groups"]
-        # preloaded-seen rows are dupes and their hashes count
-        # (reference: DeduperTest.kt:408-412)
-        report = DedupeReport(
-            record_count=n_records + pre_rows,
-            hash_columns=self.hash_keys(df),
-            columns_found=df.columns,
-            dupe_count=(n_records - stats["n_survivors"]) + pre_rows,
-            distinct_dupe_count=n_groups + pre_groups,
-            hash_count=stats["hash_count"] + pre_hashes,
-            success=True,
-        )
-
-        dupe_groups = groups.where(F.col("n_members") > 1).select(
-            "cluster_id", "member_ids", "n_members",
-            F.col("cluster_id").alias("survivor_id"),
-        )
-        if pre_group_detail is not None:
-            dupe_groups = dupe_groups.unionByName(pre_group_detail)
-        # group detail (reference report.dupes, Deduper.kt:42-60) —
-        # cap-limited exactly like the exact path's build_report;
-        # dupe_groups now includes preloaded-hit groups, so the cap
-        # gates on the TOTAL group count
-        if 0 < (n_groups + pre_groups) <= 1000:
-            for r in dupe_groups.collect():
-                report.dupes[r["cluster_id"]] = {
-                    "member_ids": list(r["member_ids"]),
-                    "survivor_id": r["survivor_id"],
-                    "n_members": r["n_members"],
-                }
-        self.metrics.append(
-            {"stage": "report", "sec": round(time.time() - t_rep, 3)}
-        )
-        return clusters, dupe_groups, report, n_records
-
     def run(self, spark: SparkSession, df: DataFrame) -> PipelineResult:
         t0 = time.time()
         self.metrics = []
@@ -623,24 +541,30 @@ class DedupPipeline:
         # the PSNR audit reads only the edges checkpoint and the images:
         # one driver thread runs it alongside CC and the report, and it
         # is joined before any sink is written
-        with ThreadPoolExecutor(max_workers=1) as pool:
+        audit = None
+        if self._pixel_check() == "audit":
+            pool = ThreadPoolExecutor(max_workers=1)
             audit = pool.submit(
                 inheritable_thread_target(spark)(self._psnr_audit), edges, df
-            ) if self._pixel_check() == "audit" else None
-            clusters, dupe_groups, report, n_records = self._cluster_and_report(
-                spark, df, feats, edges, pre_rows, pre_groups, pre_hashes,
-                pre_group_detail,
             )
-            if audit is not None:
-                entry = audit.result()
-                self.metrics.append(entry)
-                if entry["passed"] < entry["sampled"]:
-                    raise RuntimeError(
-                        f"PSNR fidelity audit failed: "
-                        f"{entry['sampled'] - entry['passed']} of "
-                        f"{entry['sampled']} sampled pairs below "
-                        f"{self.config.fuzzy.psnr_threshold_db} dB"
-                    )
+            pool.shutdown(wait=False)  # the worker exits once the audit ends
+
+        t_cc = time.time()
+        # union_pairs ends in a groupBy(id_l, id_r): edges are distinct
+        labeled = connected_components(edges, nodes=feats.select("id"),
+                                       edges_distinct=True)
+        self.metrics.append(
+            {"stage": "cc_rounds", "sec": round(time.time() - t_cc, 3)}
+        )
+        clusters = self._materialize(
+            spark,
+            "clusters",
+            labeled.select(F.col("id").alias("image_id"), "cluster_id"),
+            # the report's collect below is the first action and reads
+            # clusters exactly once (through the per-cluster aggregate)
+            # — it materializes the checkpoint, saving a dedicated job
+            lazy=True,
+        )
 
         survivor_ids = clusters.where(
             F.col("image_id") == F.col("cluster_id")
@@ -656,6 +580,74 @@ class DedupPipeline:
                 ).alias("json_row")
             )
         )
+
+        # ---- report: ONE per-cluster aggregate feeds every counter, the
+        # group detail and the dupes sink; one collect() computes the
+        # counters and the distinct-hash count together, and so
+        # materializes both lazy checkpoints (clusters and the
+        # aggregate) before the concurrent sinks read them
+        t_rep = time.time()
+        groups = clusters.groupBy("cluster_id").agg(
+            F.sort_array(F.collect_list("image_id")).alias("member_ids"),
+            F.count("*").alias("n_members"),
+            F.sum((F.col("image_id") == F.col("cluster_id")).cast("long"))
+            .alias("n_survivors"),
+        ).localCheckpoint(eager=False)
+        stats = groups.agg(
+            # coalesce: an all-seen incremental run clusters ZERO rows
+            F.coalesce(F.sum("n_members"), F.lit(0)).alias("n_records"),
+            F.coalesce(F.sum("n_survivors"), F.lit(0)).alias("n_survivors"),
+            # clusters that own at least one non-survivor row == number
+            # of dupe groups (reference distinctDupeCount)
+            F.count_if(F.col("n_members") > F.col("n_survivors"))
+            .alias("n_dupe_groups"),
+        ).crossJoin(
+            feats.agg(F.count_distinct("exact_hash").alias("hash_count"))
+        ).collect()[0]
+        n_records = stats["n_records"]          # fresh rows (clustered)
+        n_groups = stats["n_dupe_groups"]
+        # preloaded-seen rows are dupes and their hashes count
+        # (reference: DeduperTest.kt:408-412)
+        report = DedupeReport(
+            record_count=n_records + pre_rows,
+            hash_columns=self.hash_keys(df),
+            columns_found=df.columns,
+            dupe_count=(n_records - stats["n_survivors"]) + pre_rows,
+            distinct_dupe_count=n_groups + pre_groups,
+            hash_count=stats["hash_count"] + pre_hashes,
+            success=True,
+        )
+
+        dupe_groups = groups.where(F.col("n_members") > 1).select(
+            "cluster_id", "member_ids", "n_members",
+            F.col("cluster_id").alias("survivor_id"),
+        )
+        if pre_group_detail is not None:
+            dupe_groups = dupe_groups.unionByName(pre_group_detail)
+        # group detail (reference report.dupes, Deduper.kt:42-60) —
+        # cap-limited exactly like the exact path's build_report;
+        # dupe_groups now includes preloaded-hit groups, so the cap
+        # gates on the TOTAL group count
+        if 0 < (n_groups + pre_groups) <= 1000:
+            for r in dupe_groups.collect():
+                report.dupes[r["cluster_id"]] = {
+                    "member_ids": list(r["member_ids"]),
+                    "survivor_id": r["survivor_id"],
+                    "n_members": r["n_members"],
+                }
+        self.metrics.append(
+            {"stage": "report", "sec": round(time.time() - t_rep, 3)}
+        )
+        if audit is not None:
+            entry = audit.result()
+            self.metrics.append(entry)
+            if entry["passed"] < entry["sampled"]:
+                raise RuntimeError(
+                    f"PSNR fidelity audit failed: "
+                    f"{entry['sampled'] - entry['passed']} of "
+                    f"{entry['sampled']} sampled pairs below "
+                    f"{self.config.fuzzy.psnr_threshold_db} dB"
+                )
 
         result = PipelineResult(
             clusters=clusters,

@@ -10,7 +10,8 @@ commits here). What survives:
   * reconciliation (O27) — the reference logs mismatches
     (consumers/BaseConsumer.kt:106-117); THIS engine fails hard. Both
     writers share one helper: the sinks are written concurrently, then
-    counted back from storage in a single query.
+    counted back from storage in a single query; the hashes ledger
+    follows, written and counted only once the others reconcile.
 """
 
 from __future__ import annotations
@@ -102,17 +103,35 @@ def _write_reconciled(
     rows)``; a None path is skipped), then reconcile the rows in
     storage against ``expected``; a mismatch raises.
 
-    The sinks are independent, so they are written concurrently, one
-    driver thread each; the threads inherit the caller's job group,
-    description and tags, so every job stays attributable to the
-    caller. Every frame a sink reads must already be materialized: a
-    lazily checkpointed frame read by two threads would be computed
-    twice. All sinks are then counted back in ONE query (a union of the
-    stored sinks grouped by sink name) read with the known schema, so
-    no footer-inference job runs."""
+    The "hashes" ledger is what the next incremental run preloads, so
+    it is written last: only once every other sink is written and
+    reconciled. A failed run therefore never leaves a ledger that would
+    mark its own batch as already seen."""
     sinks = {name: c for name, c in checks.items() if c[0]}
-    if not sinks:
-        return {}
+    written: dict[str, int] = {}
+    for wave in ([n for n in sinks if n != "hashes"],
+                 [n for n in sinks if n == "hashes"]):
+        if wave:
+            written.update(_write_wave(spark, {n: sinks[n] for n in wave},
+                                       reconcile))
+    return written
+
+
+def _write_wave(
+    spark: SparkSession,
+    sinks: dict[str, tuple[str, DataFrame, int]],
+    reconcile: bool,
+) -> dict[str, int]:
+    """Write independent sinks concurrently, one driver thread each,
+    then count them back and reconcile.
+
+    The threads inherit the caller's job group, description and tags,
+    so every job stays attributable to the caller. Every frame a sink
+    reads must already be materialized: a lazily checkpointed frame
+    read by two threads would be computed twice. All sinks are counted
+    back in ONE query (a union of the stored sinks grouped by sink
+    name) read with the known schema, so no footer-inference job
+    runs."""
     with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
         futures = [pool.submit(inheritable_thread_target(spark)(write_table),
                                df, path) for path, df, _ in sinks.values()]

@@ -108,6 +108,46 @@ def test_pipeline_sinks_reconcile_through_one_read_back(spark, tmp_path):
     with pytest.raises(ReconciliationError, match="sink 'clusters' wrote"):
         write_pipeline_outputs(spark, res, rep, sinks("bad_clusters"),
                                n_fresh=rep.record_count + 1)
+    # the ledger waits for every other sink to reconcile
+    assert not (tmp_path / "bad_clusters" / "hashes").exists()
+
+
+def test_failed_sink_leaves_the_hashes_ledger_untouched(spark, tmp_path):
+    """The hashes ledger is what the next incremental run preloads, so
+    it is written only after every other sink is written and
+    reconciled: a failed target write or a failed dupes reconciliation
+    leaves the previous run's ledger as it was."""
+    df = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")],
+                               "id long, k string")
+    res = exact_dedup(df, ("k",), order_col="id")
+    rep = build_report(res, ["k"], df.columns)
+    ledger = str(tmp_path / "hashes")
+    spark.createDataFrame([("prior",)], "hash string").write.parquet(ledger)
+
+    def ledger_rows():
+        return [tuple(r) for r in spark.read.parquet(ledger).collect()]
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a file, so no sink directory fits under it")
+    with pytest.raises(Exception):
+        write_dedup_outputs(spark, res, rep,
+                            target_path=str(blocker / "target"),
+                            dupes_path=str(tmp_path / "dupes"),
+                            hashes_path=ledger)
+    assert ledger_rows() == [("prior",)]
+
+    poisoned = dataclasses.replace(
+        rep, distinct_dupe_count=rep.distinct_dupe_count + 1)
+    with pytest.raises(ReconciliationError, match="sink 'dupes' wrote"):
+        write_dedup_outputs(spark, res, poisoned,
+                            target_path=str(tmp_path / "target"),
+                            dupes_path=str(tmp_path / "dupes"),
+                            hashes_path=ledger)
+    assert ledger_rows() == [("prior",)]
+
+    written = write_dedup_outputs(spark, res, rep, hashes_path=ledger)
+    assert written == {"hashes": 2}
+    assert len(ledger_rows()) == 2
 
 
 def test_stream_dedup_incremental(spark, tmp_path):
