@@ -86,15 +86,13 @@ class _HostLabels:
 
 
 def _stage_count(spark, group: str) -> int:
-    """Distinct stages executed under a job group — the regression pin:
-    wall time swings 2-3x with tenant noise, stage-count creep does not."""
-    tracker = spark.sparkContext.statusTracker()
-    stages: set[int] = set()
-    for j in tracker.getJobIdsForGroup(group):
-        info = tracker.getJobInfo(j)
-        if info:
-            stages.update(info.stageIds)
-    return len(stages)
+    """Stages a job group ran (last attempt COMPLETE or FAILED; skipped
+    stages, whose shuffle output was reused, are not counted) — the
+    regression pin: wall time swings 2-3x with tenant noise, stage-count
+    creep does not."""
+    from perfbench.probe import stage_stats
+
+    return int(stage_stats(spark, group)["stages"])
 
 
 def main() -> None:

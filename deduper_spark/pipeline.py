@@ -74,6 +74,7 @@ from deduper_spark.operators.lsh import (
 from deduper_spark.operators.suffix import containment_pairs
 from deduper_spark.operators.verify import verify_jaccard, verify_psnr
 from deduper_spark.report import DedupeReport
+from deduper_spark.session import codegen_compiles
 
 ALL_FAMILIES = ("exact", "minhash", "simhash", "phash", "substring")
 
@@ -481,6 +482,7 @@ class DedupPipeline:
 
     def run(self, spark: SparkSession, df: DataFrame) -> PipelineResult:
         t0 = time.time()
+        compiles0 = codegen_compiles(spark)
         self.metrics = []
 
         feats = self._materialize(spark, "features", self.features(df))
@@ -671,7 +673,9 @@ class DedupPipeline:
             )
             self.metrics.append({"stage": "sinks", **written})
 
-        self.metrics.append({"stage": "total", "sec": round(time.time() - t0, 3)})
+        self.metrics.append({
+            "stage": "total", "sec": round(time.time() - t0, 3),
+            "codegen_compiles": codegen_compiles(spark) - compiles0})
         self._write_metrics(report)
         return result
 

@@ -1,6 +1,7 @@
 """End-to-end pipeline tests on the deterministic synthetic corpus:
 golden cluster assignments, dup-pair recall >= 0.99, fidelity
-invariants, family-selective runs, checkpoint resume.
+invariants, family-selective runs, checkpoint resume, no recompiles
+on a repeated run.
 (Golden pattern: reference DeduperTest.kt:46-83 + BASELINE.json targets.)
 """
 
@@ -15,7 +16,10 @@ from pyspark.sql import functions as F
 
 from deduper_spark.config import DedupConfig, FuzzyConfig
 from deduper_spark.functions.phash import decode_image, psnr_db
+from deduper_spark.operators.exact import build_report, exact_dedup
 from deduper_spark.pipeline import DedupPipeline
+from deduper_spark.session import codegen_compiles
+from deduper_spark.sinks.writers import write_dedup_outputs
 from deduper_spark.synth import expected_clusters, expected_dup_pairs, make_pdf
 
 SEED = 42
@@ -206,3 +210,50 @@ def test_failed_psnr_audit_fails_the_run_and_writes_no_sink(spark, corpus,
     res = DedupPipeline(cfg, collect_metrics=False).run_safe(spark, corpus)
     assert res.report.success is False
     assert not any(os.path.exists(p) for p in sinks.values())
+
+
+def _compiles_of_repeat(spark, run) -> int:
+    """Classes compiled by the second of two identical runs.
+
+    A repeat reuses the session's generated classes, but AQE re-plans
+    from runtime statistics and from the order in which concurrent
+    stages finish, so it can still meet a few plan variants it has not
+    compiled yet. The callers' bounds sit above the counts sampled with
+    the 1000-entry cache and far below those at Spark's default 100.
+    """
+    run(0)
+    before = codegen_compiles(spark)
+    run(1)
+    return codegen_compiles(spark) - before
+
+
+def test_repeated_pipeline_run_reuses_generated_code(spark, corpus, tmp_path):
+    pipes = []
+
+    def run(i):
+        cfg = DedupConfig(fuzzy=FuzzyConfig(psnr_mode="audit"),
+                          **_sink_paths(tmp_path / str(i)))
+        pipes.append(DedupPipeline(cfg, collect_metrics=False))
+        pipes[-1].run(spark, corpus)
+
+    compiles = _compiles_of_repeat(spark, run)
+    assert compiles <= 50   # sampled 0-30; ~200 at 100 entries
+    total = next(m for m in pipes[-1].metrics if m["stage"] == "total")
+    assert 0 <= total["codegen_compiles"] <= compiles
+
+
+def test_repeated_exact_write_reuses_generated_code(spark, tmp_path):
+    df = spark.range(3000).select(
+        (F.col("id") % 1100).alias("k1"), (F.col("id") % 3).alias("k2"),
+        F.col("id").alias("seq"), F.concat(F.lit("v"), F.col("id")).alias("v"))
+    keys = ["k1", "k2"]
+
+    def run(i):
+        res = exact_dedup(df, tuple(keys), order_col="seq")
+        rep = build_report(res, keys, df.columns)
+        write_dedup_outputs(
+            spark, res, rep,
+            **{f"{k}_path": str(tmp_path / f"{k}{i}")
+               for k in ("target", "dupes", "hashes")})
+
+    assert _compiles_of_repeat(spark, run) <= 10   # sampled 0; 25-27 at 100
