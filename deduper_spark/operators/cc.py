@@ -7,28 +7,40 @@ connected component. cluster_id = min member id (union-find label),
 which also IS the keep-first survivor (min image_id — the reference's
 first-found-row generalized).
 
-Contract locally, then finish in one task (local union-find before
+Label on the driver whatever fits the budget (local union-find before
 the global merge, as in BTS: Load-Balanced Distributed Union-Find,
 ICDE 2024):
 
-1. Each partition's edge slice runs through one NumPy min-label
-   union-find (``_min_labels``: scatter-min hooking of roots, then
-   pointer jumping) inside a ``mapInPandas``, which turns it into a
-   star forest: every non-root node -> its local min root, at most
-   n_p - 1 rows. Clique-ish dup families and whole chain segments
-   close here.
-2. When the forest fits one task — rows x row width at most
-   ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the partition
-   size AQE already aims for — a single ``coalesce(1)`` pass runs the
-   same kernel over all of it and emits (id, cluster_id) for every
-   node, roots included. That costs one job (the forest stats) and no
-   rounds: dup graphs are scheduling-latency-bound, not data-bound.
-3. Only a forest too large for one task runs alternating
+1. The budget is ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+   (the partition size AQE already aims for; 16 MB in ``get_spark``)
+   divided by the edge row width: 1M bigint or 400k string edges.
+2. The driver finish. One bounded Arrow collect sizes and fetches the
+   input edges together — a single task reads at most budget + 1 rows.
+   If they fit, the NumPy min-label union-find (``_min_labels``:
+   scatter-min hooking of roots, then pointer jumping) labels every
+   endpoint on the driver, and ``spark.createDataFrame`` hands
+   (id, cluster_id) back as a local relation of the input's id type.
+   No Python worker runs. A ``mapInPandas`` task pays a fixed cost
+   whatever its size: ``pyspark.worker_util.setup_spark_files`` calls
+   ``importlib.invalidate_caches()``, which re-reads the directory of
+   every zip importer on the worker's path (0.12–0.20 s per call on a
+   4-core host under Python 3.11, with 16 zip importers). A warm
+   400-row identity ``mapInPandas`` took 0.19–0.33 s there against
+   0.05–0.08 s for the same query in the JVM, so that cost dominated
+   dup graphs of a few thousand edges. The bound keeps the collect
+   well below the 64 MB ``autoBroadcastJoinThreshold`` that AQE may
+   already collect to the driver for a broadcast.
+3. Only an input over budget is contracted in parallel: each
+   partition's edge slice runs through the same kernel inside a
+   ``mapInPandas``, which turns it into a star forest (every non-root
+   node -> its local min root, at most n_p - 1 rows). Clique-ish dup
+   families and whole chain segments close there. Then alternating
    large-star/small-star rounds (Kiveris et al., "Connected Components
    in MapReduce and Beyond", SoCC'14 — GraphFrames' default CC), each
-   followed by another local contraction, until it fits or reaches the
-   provable star-forest fixpoint. ``max_iter`` bounds the rounds and
-   a lost-node assertion checks the labels against the input
+   followed by another local contraction, run until the forest fits
+   the budget — it then takes the driver finish — or reaches the
+   provable star-forest fixpoint. ``max_iter`` bounds the rounds and a
+   lost-node assertion checks the fixpoint labels against the input
    endpoints. Each round localCheckpoint()s so the plan does not grow
    superlinearly (SURVEY.md §7 hard part (c)).
 """
@@ -94,18 +106,25 @@ def _contract(edges: DataFrame) -> DataFrame:
     return edges.mapInPandas(forest, edges.schema)
 
 
-def _finish(forest: DataFrame) -> DataFrame:
-    """The whole forest in one task -> (id, cluster_id) for every node."""
-    t = forest.schema["src"].dataType
+def _driver_finish(edges: DataFrame, max_rows: int) -> DataFrame | None:
+    """(id, cluster_id) for every endpoint of an edge set of at most
+    ``max_rows`` rows, labelled on the driver; None for a larger one.
 
-    def label(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdf = _frame(batches)
-        if pdf is not None:
-            ids, root = _min_labels(pdf["src"], pdf["dst"])
-            yield pd.DataFrame({"id": ids, "cluster_id": ids[root]})
-
+    One bounded Arrow collect sizes and fetches the edges together: a
+    single task reads at most ``max_rows + 1`` of them (a limit over
+    one partition needs no exchange). The labels go back as a local
+    relation of the input's id type, in one partition: split the
+    default way, they would add a task per core to every plan that
+    reads them, and a file per core to every sink that writes them."""
+    pdf = edges.coalesce(1).limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        return None
+    ids, root = _min_labels(pdf["src"], pdf["dst"])
+    t = edges.schema["src"].dataType
     schema = StructType([StructField("id", t), StructField("cluster_id", t)])
-    return forest.coalesce(1).mapInPandas(label, schema)
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "cluster_id": ids[root]}), schema
+    ).coalesce(1)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -181,20 +200,37 @@ def connected_components(
     in-engine pair generator ends in a groupBy/distinct on (id_l, id_r)
     so the dedup Exchange here would be a pure repeat (r6).
     ``id_type`` is ignored: labels keep the input's id type."""
-    e0 = edges.select(
+    e = edges.select(
         F.col("id_l").alias("src"), F.col("id_r").alias("dst")
     ).where(F.col("src") != F.col("dst"))
     if not edges_distinct:
-        e0 = e0.distinct()
-    # lazy: the stats aggregation below materializes e0 together with
-    # the contraction — one job
-    e = first = _contract(e0).localCheckpoint(eager=False)
-
+        e = e.distinct()
     spark = edges.sparkSession
     java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
     budget = java_utils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    row_bytes = e._jdf.schema().defaultSize()
+    max_rows = budget // e._jdf.schema().defaultSize()
+    # lazy: the finish's collect materializes it; a contraction after
+    # an over-budget collect reads what it cached and computes the rest
+    e = e.localCheckpoint(eager=False)
+    labels = _driver_finish(e, max_rows)
+    if labels is None:
+        labels = _star_rounds(e, max_rows, max_iter)
+    if nodes is None:
+        return labels
+    singletons = (
+        nodes.select(F.col(nodes.columns[0]).alias("id"))
+        .join(labels.select("id"), "id", "left_anti")
+        .withColumn("cluster_id", F.col("id"))
+    )
+    return labels.unionByName(singletons)
+
+
+def _star_rounds(e0: DataFrame, max_rows: int, max_iter: int) -> DataFrame:
+    """Labels of an edge set larger than the budget: contract per
+    partition, then star rounds until the forest fits ``max_rows`` or
+    is a star forest."""
+    e = first = _contract(e0).localCheckpoint(eager=False)
     rounds = 0
     while True:
         # n_src / n_roots ride the same aggregation for the fixpoint
@@ -204,9 +240,8 @@ def connected_components(
             F.count_distinct("src").alias("n_src"),
             F.count_distinct("dst").alias("n_roots"),
         ).collect()[0]
-        if stats["n"] * row_bytes <= budget:
-            labels = _finish(e)
-            break
+        if stats["n"] <= max_rows:
+            return _driver_finish(e, max_rows)
         # PROVABLE fixpoint test: the contraction and both star phases
         # emit edges oriented src > dst, and the fixpoints of the
         # alternating algorithm are exactly star forests — every child
@@ -217,8 +252,7 @@ def connected_components(
         if stats["n"] == stats["n_src"] and e.select("dst").join(
                 e.select(F.col("src").alias("dst")), "dst", "left_semi"
         ).limit(1).count() == 0:
-            labels = _star_labels(first, e, stats)
-            break
+            return _star_labels(first, e, stats)
         if rounds == max_iter:
             # silent truncation would split components into WRONG
             # cluster ids and corrupt survivor selection — fail hard
@@ -229,19 +263,6 @@ def connected_components(
         e = _contract(_small_star(_large_star(e))).localCheckpoint(
             eager=False)
         rounds += 1
-
-    if nodes is None:
-        return labels
-    # the labeled ids are exactly the forest's endpoints: anti-join
-    # against the checkpoint, not the labels, so the finish runs once
-    singletons = (
-        nodes.select(F.col(nodes.columns[0]).alias("id"))
-        .join(e.select(F.col("src").alias("id"))
-              .unionByName(e.select(F.col("dst").alias("id"))),
-              "id", "left_anti")
-        .withColumn("cluster_id", F.col("id"))
-    )
-    return labels.unionByName(singletons)
 
 
 def _star_labels(first: DataFrame, e: DataFrame, stats) -> DataFrame:

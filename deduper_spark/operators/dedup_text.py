@@ -22,9 +22,13 @@ from deduper_spark.functions.text import (
     token_hashes_expr,
     tokens_expr,
 )
+from deduper_spark.operators.cc import connected_components
 from deduper_spark.operators.exact import ExactDedupResult, exact_dedup
 from deduper_spark.operators.lsh import (
     array_band_buckets,
+    bucket_groups,
+    bucket_pair_rows,
+    bucket_stars,
     candidate_pairs,
     hamming_candidate_pairs,
     int64_band_buckets,
@@ -55,18 +59,15 @@ def doc_features(df: DataFrame, id_col: str = "doc_id",
     return out.drop("tokens")
 
 
-def minhash_lsh_doc_pairs(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text",
-                          cfg: FuzzyConfig | None = None) -> DataFrame:
-    """(id_l, id_r, jaccard) — verified near-dup doc pairs.
-
-    feats is pinned with localCheckpoint: it feeds BOTH the banding
-    side and the exact-Jaccard verification join, and without the pin
-    the feature projection (tokenize + shingle + minhash Arrow
-    work) executes twice end-to-end — the exact double-execution the
-    flagship pipeline pins at pipeline.py fuzzy_ok (measured as the
-    BENCH_r02 doc_minhash_lsh 2x regression)."""
-    cfg = cfg or FuzzyConfig()
+def _minhash_features(df: DataFrame, id_col: str, text_col: str,
+                      cfg: FuzzyConfig) -> DataFrame:
+    """(id, shingle_hashes, minhash_buckets), pinned with
+    localCheckpoint: it feeds BOTH the banding side and the exact-Jaccard
+    verification join, and without the pin the feature projection
+    (tokenize + shingle + minhash Arrow work) executes twice end-to-end
+    — the exact double-execution the flagship pipeline pins at
+    pipeline.py fuzzy_ok (measured as the BENCH_r02 doc_minhash_lsh 2x
+    regression)."""
     # r6 (guide §4.1/§2.3): banding is FUSED inside the minhash UDF
     # (minhash_buckets_expr, the flagship pipeline's path) so the Arrow
     # return payload is cfg.bands longs, not the num_perm-element
@@ -80,7 +81,7 @@ def minhash_lsh_doc_pairs(df: DataFrame, id_col: str = "doc_id",
     # times, and an inlined split/regex expression would re-evaluate
     # per window position — O(tokens^2) normalize work per doc
     # (measured 3x regression when inlined).
-    feats = (
+    return (
         df.select(
             F.col(id_col).alias("id"),
             tokens_expr(F.coalesce(F.col(text_col), F.lit(""))).alias("tokens"),
@@ -97,6 +98,15 @@ def minhash_lsh_doc_pairs(df: DataFrame, id_col: str = "doc_id",
         .select("id", "shingle_hashes", "minhash_buckets")
         .localCheckpoint()
     )
+
+
+def minhash_lsh_doc_pairs(df: DataFrame, id_col: str = "doc_id",
+                          text_col: str = "text",
+                          cfg: FuzzyConfig | None = None) -> DataFrame:
+    """(id_l, id_r, jaccard) — every verified near-dup doc pair: each
+    candidate pair of the MinHash-LSH banding, exact-Jaccard checked."""
+    cfg = cfg or FuzzyConfig()
+    feats = _minhash_features(df, id_col, text_col, cfg)
     bb = array_band_buckets(feats, "id", "minhash_buckets", "minhash")
     pairs, _ = candidate_pairs(bb, cfg.max_bucket_size)
     return verify_jaccard(pairs, feats, "shingle_hashes",
@@ -223,25 +233,69 @@ def minhash_doc_clusters(df: DataFrame, id_col: str = "doc_id",
                          cfg: FuzzyConfig | None = None) -> DataFrame:
     """(doc_id, cluster_id) — near-dup cluster assignment for EVERY doc.
 
-    Transitive closure over the verified MinHash-LSH pair stream
-    (minhash_lsh_doc_pairs) via the connected-components operator
-    (cc.py: local union-find contraction, then one task); singletons label
-    themselves. cluster_id = min doc id of the component — the same
-    min-id survivor contract as the flagship pipeline, now exposed at
-    document level (the image side ships it as image_dedup_clusters).
+    The clusters are the connected components (cc.py) of the verified
+    MinHash-LSH pair set — every candidate pair of minhash_lsh_doc_pairs
+    whose exact Jaccard passes; singletons label themselves.
+    cluster_id = min doc id of the component — the same min-id survivor
+    contract as the flagship pipeline, now exposed at document level
+    (the image side ships it as image_dedup_clusters).
+
+    A component depends only on connectivity, so most candidate pairs
+    need no verification: a dup family shares many buckets, and any
+    spanning set of its verified pairs builds the same component.
+    Verification runs per cluster, in two rounds over one pinned
+    bucket grouping:
+
+    1. Only each admitted (sub-)bucket's star — its min id to every
+       other member — is exact-verified, and CC labels the result.
+    2. Only the candidate pairs whose two ends still carry different
+       round-1 labels are verified.
+
+    A final CC over the round-1 star forest plus the round-2 edges, with
+    every doc as a node, gives the clusters. This is exact: a candidate
+    pair that would verify either joins two ends that verified round-1
+    edges already connect, or is itself verified in round 2; and every
+    edge used is a verified candidate pair. So the components equal
+    those of the full verified pair set, while a boilerplate family of
+    s docs costs about s verifications instead of s(s-1)/2.
 
     The DuckDB oracle recomputes the closure with a recursive CTE over
-    the exact-Jaccard pair set, so this is the first driver query that
-    checks the CC operator against an independent transitive-closure
+    the exact-Jaccard pair set, so this is the driver query that checks
+    the CC operator against an independent transitive-closure
     implementation rather than planted truth.
     """
-    from deduper_spark.operators.cc import connected_components
+    cfg = cfg or FuzzyConfig()
+    feats = _minhash_features(df, id_col, text_col, cfg)
+    bb = array_band_buckets(feats, "id", "minhash_buckets", "minhash")
+    # pinned: both rounds read the grouping
+    groups = bucket_groups(bb, cfg.max_bucket_size)[0] \
+        .localCheckpoint(eager=False)
 
-    pairs = minhash_lsh_doc_pairs(df, id_col, text_col, cfg)
+    def verified(pairs: DataFrame) -> DataFrame:
+        return verify_jaccard(pairs, feats, "shingle_hashes",
+                              cfg.jaccard_threshold).select("id_l", "id_r")
+
+    stars = verified(bucket_stars(groups).distinct())
+    first = connected_components(stars, edges_distinct=True)
+    label_l = first.select(F.col("id").alias("id_l"),
+                           F.col("cluster_id").alias("c_l"))
+    label_r = first.select(F.col("id").alias("id_r"),
+                           F.col("cluster_id").alias("c_r"))
+    open_pairs = (
+        bucket_pair_rows(groups)
+        .join(label_l, "id_l", "left")
+        .join(label_r, "id_r", "left")
+        .where(F.coalesce("c_l", "id_l") != F.coalesce("c_r", "id_r"))
+        .select("id_l", "id_r")
+        .distinct()
+    )
+    forest = first.where(F.col("id") != F.col("cluster_id")).select(
+        F.col("id").alias("id_l"), F.col("cluster_id").alias("id_r"))
     comp = connected_components(
-        pairs.select("id_l", "id_r"),
+        # disjoint: forest edges join ends of one round-1 label,
+        # open pairs ends of two
+        forest.unionByName(verified(open_pairs)),
         nodes=df.select(F.col(id_col).alias("id")),
-        # verified pairs end in a groupBy(id_l, id_r) — already distinct
         edges_distinct=True,
     )
     return comp.select(F.col("id").alias(id_col),

@@ -8,7 +8,10 @@ pairs; verification (verify.py) then confirms or rejects.
 Scale design (the part that has to survive 100 TB):
   * banding is a single projection + posexplode — no shuffle;
   * pairs come from grouping each (family, band, bucket): one hash
-    Exchange, with the i<j pairs enumerated inside codegen;
+    Exchange (bucket_groups), with the i<j pairs enumerated inside
+    codegen (bucket_pair_rows). A caller that needs only connectivity
+    reads a spanning star per group instead (bucket_stars) — from the
+    same grouping, so one pinned grouping serves both;
   * HOT BUCKETS (stop-shingle bands, constant captions) are the skew
     killer: a bucket of size s yields s(s-1)/2 pairs. Buckets larger
     than max_bucket_size are salted into sub-buckets of about that
@@ -249,11 +252,13 @@ def hamming_candidate_pairs(
     return pairs, dropped
 
 
-def candidate_pairs(
+def bucket_groups(
     buckets: DataFrame,
     max_bucket_size: int = 200,
 ) -> tuple[DataFrame, DataFrame]:
-    """Self-join each (family, band, bucket) group → (id_l < id_r) pairs.
+    """The grouping half of candidate_pairs: (family, band, bucket,
+    salt, ids) — one row per admitted (sub-)bucket, holding its member
+    ids — and the dropped-bucket metrics.
 
     Skew defusal (SURVEY.md §7 hard part (d); north rule "salted
     repartitioning"): a bucket of size s yields s(s-1)/2 pairs, so hot
@@ -265,9 +270,6 @@ def candidate_pairs(
     nearly always share other, colder buckets too, so pair recall loss
     is negligible — asserted by the recall tests). Buckets beyond
     ``SALT_CAP`` are stop-patterns and are dropped outright.
-
-    Returns (pairs, dropped_buckets_metrics) — dropped buckets are
-    reported, never silently eaten.
     """
     b, dropped = _admit(buckets)
     n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size))
@@ -275,17 +277,21 @@ def candidate_pairs(
         "salt", F.pmod(F.xxhash64("id"), n_sub).cast("int")
     ).drop("bucket_size")
     key = ["family", "band", "bucket", "salt"]
-
     # Pair generation by GROUPING, not self-joining (r6, guide §2.4):
     # collect each (sub-)bucket's member ids — bounded by the caps, so
-    # the array is at most a few hundred elements — and emit the i<j
-    # pairs with a nested array transform inside codegen. One hash
-    # Exchange (the groupBy) replaces the former self-join's two
-    # exchanges, and the bucket rows are evaluated once instead of
-    # once per join side. Pair set is identical: position pairs i<j
-    # enumerate each unordered pair exactly once; least/greatest
-    # orients it (the join's id_l < id_r filter did the same).
-    grp = b.groupBy(*key).agg(F.collect_list("id").alias("ids"))
+    # the array is at most a few hundred elements. One hash Exchange
+    # (the groupBy) replaces the former self-join's two exchanges, and
+    # the bucket rows are evaluated once instead of once per join side.
+    return b.groupBy(*key).agg(F.collect_list("id").alias("ids")), dropped
+
+
+def bucket_pair_rows(groups: DataFrame) -> DataFrame:
+    """(id_l < id_r, family) for every pair inside each group of
+    bucket_groups, once per group that holds it: the i<j position
+    pairs, enumerated with a nested array transform inside codegen.
+    Position pairs i<j enumerate each unordered pair exactly once;
+    least/greatest orients it (the former join's id_l < id_r filter
+    did the same)."""
     n = F.size("ids")
     pair_structs = F.flatten(
         F.transform(
@@ -297,9 +303,35 @@ def candidate_pairs(
             ),
         )
     )
-    pairs = (
-        grp.select("family", F.explode(pair_structs).alias("p"))
+    return (
+        groups.select("family", F.explode(pair_structs).alias("p"))
         .select("p.id_l", "p.id_r", "family")
+    )
+
+
+def bucket_stars(groups: DataFrame) -> DataFrame:
+    """(id_l, id_r) from each group's min id to every other member —
+    a spanning star of the group's candidate clique, |group| - 1 pairs
+    instead of |group|(|group|-1)/2. Not de-duplicated: a family that
+    shares several bands repeats its star once per band."""
+    m = F.array_min("ids")
+    return groups.select(
+        m.alias("id_l"), F.explode(F.array_remove("ids", m)).alias("id_r"))
+
+
+def candidate_pairs(
+    buckets: DataFrame,
+    max_bucket_size: int = 200,
+) -> tuple[DataFrame, DataFrame]:
+    """Self-join each (family, band, bucket) group → (id_l < id_r) pairs:
+    bucket_groups, then bucket_pair_rows, de-duplicated across bands.
+
+    Returns (pairs(id_l, id_r, families), dropped_buckets_metrics) —
+    dropped buckets are reported, never silently eaten.
+    """
+    groups, dropped = bucket_groups(buckets, max_bucket_size)
+    pairs = (
+        bucket_pair_rows(groups)
         .groupBy("id_l", "id_r")
         .agg(F.collect_set("family").alias("families"))
     )

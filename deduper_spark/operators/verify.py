@@ -36,14 +36,16 @@ def _attach(pairs: DataFrame, feats: DataFrame, cols: list[str]) -> DataFrame:
 def verify_jaccard(
     pairs: DataFrame, feats: DataFrame, shingle_col: str, threshold: float
 ) -> DataFrame:
-    """feats: (id, <shingle_col>: array<long>). Exact set Jaccard."""
+    """pairs: (id_l, id_r, ...); feats: (id, <shingle_col>: array<long>).
+    Exact set Jaccard: the pairs at or above ``threshold``, with their
+    own columns plus ``jaccard``."""
     j = _attach(pairs, feats, [shingle_col])
     inter = F.size(F.array_intersect(f"{shingle_col}_l", f"{shingle_col}_r"))
     union = F.size(F.array_union(f"{shingle_col}_l", f"{shingle_col}_r"))
     return (
         j.withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
         .where(F.col("jaccard") >= threshold)
-        .select("id_l", "id_r", "families", "jaccard")
+        .select(*pairs.columns, "jaccard")
     )
 
 

@@ -70,6 +70,27 @@ CC_GRAPHS = {
 }
 
 
+PYTHON_NODES = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython")
+
+
+def _cc_ids(id_type, n):
+    # both id maps increase with the node index, so min id == min index
+    return ([i * 7919 - 10**12 for i in range(n)] if id_type == "bigint"
+            else [f"n{i:05d}" for i in range(n)])
+
+
+def _counting(monkeypatch, module, name):
+    calls = []
+    orig = getattr(module, name)
+
+    def counted(*a, **kw):
+        calls.append(a)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
 @pytest.mark.parametrize("path", ["single_task", "star_rounds"])
 @pytest.mark.parametrize("id_type", ["bigint", "string"])
 @pytest.mark.parametrize("graph", sorted(CC_GRAPHS))
@@ -78,7 +99,11 @@ def test_cc_alternating_matches_union_find(spark, star_path, monkeypatch,
     """CC labels == exact driver union-find on every graph shape, id
     type and path; cluster_id is the min member id (keep-first). The
     NumPy kernel alone must match too: the contraction + finish pair
-    can mask a kernel that only half-compresses its trees."""
+    can mask a kernel that only half-compresses its trees.
+
+    single_task: every graph here fits the budget, so it is labelled on
+    the driver — no contraction, no rounds, no Python node in the
+    labels' plan, and the ids keep their type."""
     import contextlib
     import random
 
@@ -88,9 +113,7 @@ def test_cc_alternating_matches_union_find(spark, star_path, monkeypatch,
 
     n, raw = CC_GRAPHS[graph](random.Random(7))
     truth = _union_find(n, raw)
-    # both id maps increase with the node index, so min id == min index
-    ids = ([i * 7919 - 10**12 for i in range(n)] if id_type == "bigint"
-           else [f"n{i:05d}" for i in range(n)])
+    ids = _cc_ids(id_type, n)
     pos = {v: i for i, v in enumerate(ids)}
     kid, root = cc._min_labels(pd.Series([ids[a] for a, _ in raw]),
                                pd.Series([ids[b] for _, b in raw]))
@@ -101,21 +124,58 @@ def test_cc_alternating_matches_union_find(spark, star_path, monkeypatch,
     )
     nodes = spark.createDataFrame([(i,) for i in ids], f"id {id_type}")
 
-    rounds = []
-    small_star = cc._small_star
-
-    def counted(e):
-        rounds.append(e)
-        return small_star(e)
-
-    monkeypatch.setattr(cc, "_small_star", counted)
+    rounds = _counting(monkeypatch, cc, "_small_star")
+    contracted = _counting(monkeypatch, cc, "_contract")
     with star_path() if path == "star_rounds" else contextlib.nullcontext():
-        got = {r["id"]: r["cluster_id"]
-               for r in cc.connected_components(edges, nodes=nodes).collect()}
+        labels = cc.connected_components(edges, nodes=nodes)
+        got = {r["id"]: r["cluster_id"] for r in labels.collect()}
     assert len(got) == n
     assert got == {ids[i]: ids[truth[i]] for i in range(n)}
     if path == "single_task":
-        assert not rounds
+        assert not rounds and not contracted
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+        assert not [p for p in PYTHON_NODES if p in plan], plan
+        assert labels.schema["id"].dataType.simpleString() == id_type
+        assert labels.schema["cluster_id"].dataType.simpleString() == id_type
+    elif raw:
+        assert contracted
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_cc_rounds_then_driver_finish(spark, monkeypatch, id_type):
+    """An input over budget whose forest fits after one star round is
+    contracted, runs the round, and is then finished on the driver."""
+    import random
+
+    from deduper_spark.operators import cc
+
+    n, raw = _two_cliques(random.Random(7))
+    truth = _union_find(n, raw)
+    ids = _cc_ids(id_type, n)
+    edges = spark.createDataFrame(
+        [(ids[a], ids[b]) for a, b in raw], f"id_l {id_type}, id_r {id_type}"
+    )
+    row_bytes = 16 if id_type == "bigint" else 40
+    rounds = _counting(monkeypatch, cc, "_small_star")
+    finished = _counting(monkeypatch, cc, "_driver_finish")
+    saved = {k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.adaptive.coalescePartitions.enabled")}
+    try:
+        # 100 rows: fewer than the 1560 input edges and than the four
+        # partitions' first forests, more than the global forest's 78
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+                       f"{100 * row_bytes}b")
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+                       "false")
+        got = {r["id"]: r["cluster_id"]
+               for r in cc.connected_components(edges).collect()}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got == {ids[i]: ids[truth[i]] for i in range(n)}
+    # tried before the contraction (over budget), then after the round
+    assert len(rounds) == 1 and len(finished) == 2
 
 
 # --------------------------------------------------- simhash doc pairs

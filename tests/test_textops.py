@@ -2,18 +2,27 @@
 
 from __future__ import annotations
 
+import importlib.util
+import os
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
+from deduper_spark.config import FuzzyConfig
 from deduper_spark.functions.textstats import (
     fingerprint_expr,
     lang_id_expr,
     quality_score_expr,
     token_count_expr,
 )
+from deduper_spark.operators import dedup_text
 from deduper_spark.operators.ann import brute_force_topk, lsh_topk
+from deduper_spark.operators.cc import connected_components
 from deduper_spark.operators.dedup_text import (
     embedding_cosine_pairs,
     exact_doc_dedup,
+    minhash_doc_clusters,
     minhash_lsh_doc_pairs,
     ngram_jaccard_pairs,
     simhash_doc_pairs,
@@ -103,6 +112,132 @@ def test_doc_dedup_family(spark):
                   if r["id_r"] - r["id_l"] == 200000}
     assert len(planted_nj) >= near.count() * 0.7
     assert n_dups > 0
+
+
+def _edit_corpus(seed, n_chains, chain_len, n_boilerplate, n_singletons,
+                 tokens=30, vocab=400):
+    """(doc_id, text) rows: edit chains (each doc substitutes one token
+    of its predecessor), one boilerplate family (one substitution each
+    off a shared template) and unrelated singletons, under shuffled
+    ids so no family owns a contiguous id range."""
+    rng = random.Random(seed)
+
+    def words():
+        return [f"w{rng.randrange(vocab)}" for _ in range(tokens)]
+
+    def edit(doc):
+        doc = list(doc)
+        doc[rng.randrange(tokens)] = f"w{rng.randrange(vocab)}"
+        return doc
+
+    texts = []
+    for _ in range(n_chains):
+        doc = words()
+        for _ in range(chain_len):
+            texts.append(" ".join(doc))
+            doc = edit(doc)
+    template = words()
+    texts += [" ".join(edit(template)) for _ in range(n_boilerplate)]
+    texts += [" ".join(words()) for _ in range(n_singletons)]
+    ids = list(range(len(texts)))
+    rng.shuffle(ids)
+    return list(zip(ids, texts))
+
+
+def _clusters_vs_all_pairs(spark, monkeypatch, rows, cfg):
+    """minhash_doc_clusters' labels, the labels of connected_components
+    over every verified pair (minhash_lsh_doc_pairs), and the pair
+    counts each verify_jaccard call of minhash_doc_clusters passed."""
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    passed = []
+    verify = dedup_text.verify_jaccard
+
+    def counted(*a, **kw):
+        out = verify(*a, **kw)
+        passed.append(out)
+        return out
+
+    monkeypatch.setattr(dedup_text, "verify_jaccard", counted)
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in minhash_doc_clusters(df, cfg=cfg).collect()}
+    monkeypatch.setattr(dedup_text, "verify_jaccard", verify)
+    pairs = minhash_lsh_doc_pairs(df, cfg=cfg).select("id_l", "id_r")
+    want = {r["id"]: r["cluster_id"] for r in connected_components(
+        pairs, nodes=df.select(F.col("doc_id").alias("id"))).collect()}
+    return got, want, [p.count() for p in passed]
+
+
+# small buckets: the 40-doc boilerplate family overflows and is salted
+SALTED = FuzzyConfig(shingle_k=3, num_perm=64, bands=16, rows_per_band=4,
+                     jaccard_threshold=0.6, max_bucket_size=8)
+# 2-row bands put docs two or more edits apart in one bucket, where
+# they fail verification against the bucket's min id
+LOOSE = FuzzyConfig(shingle_k=5, num_perm=64, bands=32, rows_per_band=2,
+                    jaccard_threshold=0.6)
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_minhash_doc_clusters_equal_all_pair_components(spark, monkeypatch,
+                                                        seed):
+    """Star-first verification keeps the clusters of the full verified
+    pair set, with hot buckets salted into sub-buckets."""
+    rows = _edit_corpus(seed, n_chains=4, chain_len=10, n_boilerplate=40,
+                        n_singletons=30)
+    got, want, _ = _clusters_vs_all_pairs(spark, monkeypatch, rows, SALTED)
+    assert got == want and len(got) == len(rows)
+    assert len(set(got.values())) < len(rows)
+
+
+@pytest.mark.parametrize("seed", [4, 5])
+def test_minhash_doc_clusters_round_two_merges(spark, monkeypatch, seed):
+    """Long chains under loose banding: a chain's min id shares buckets
+    with docs too far along the chain to verify against it, so only
+    round 2 links them — and the clusters still equal the full set's."""
+    rows = _edit_corpus(seed, n_chains=6, chain_len=16, n_boilerplate=0,
+                        n_singletons=10)
+    got, want, passed = _clusters_vs_all_pairs(spark, monkeypatch, rows,
+                                               LOOSE)
+    stars, second = passed
+    assert second > 0 and stars > 0
+    assert got == want and len(got) == len(rows)
+
+
+def test_minhash_doc_clusters_null_empty_and_singletons(spark, monkeypatch):
+    base = " ".join(f"t{i}" for i in range(30))
+    rows = [(10, base), (11, base + " tail"), (12, None), (13, ""),
+            (14, None), (15, ""), (16, "one two three"),
+            (17, " ".join(f"u{i}" for i in range(30)))]
+    got, want, _ = _clusters_vs_all_pairs(spark, monkeypatch, rows,
+                                          FuzzyConfig())
+    assert got == want
+    assert got[11] == 10 and got[16] == 16 and got[17] == 17
+
+
+@pytest.fixture(scope="module")
+def oracle_gate():
+    """tools/check_entry.py — the DuckDB oracle gate of the
+    ``__spark_entry__`` queries — and its views over the SF tables."""
+    pytest.importorskip("duckdb")
+    if not os.path.isdir(SF):
+        pytest.skip(f"{SF} is absent")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "check_entry", os.path.join(root, "tools", "check_entry.py"))
+    gate = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gate)
+    return gate, gate.oracle_views(SF)
+
+
+@pytest.mark.parametrize("name", ["doc_cluster_assign", "doc_minhash_lsh",
+                                  "image_dedup_clusters"])
+def test_entry_query_matches_duckdb_oracle(spark, oracle_gate, name):
+    """The fuzzy-cluster entry queries equal their ``oracle_sql()``
+    results, compared the way tools/check_entry.py compares them."""
+    gate, con = oracle_gate
+    got = gate.entry.queries()[name](spark, SF).toPandas()
+    want = con.sql(gate.entry.oracle_sql()[name]).df()
+    assert len(want) > 0
+    assert gate.mismatches(got, want) == []
 
 
 def test_embedding_cosine_and_ann(spark):

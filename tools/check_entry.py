@@ -4,16 +4,20 @@ a given sf dir, compare row count, column names, and order-insensitive
 values.
 
 Usage: python tools/check_entry.py [sf_dir] [query ...]
+
+``oracle_views`` and ``mismatches`` are importable, so a test can run
+the same gate on a few queries.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 
@@ -33,6 +37,35 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per sf table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def mismatches(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """How the Spark result differs from the oracle's: row count,
+    column names, then order-insensitive values. Empty if they agree."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rows {len(sdf)} vs {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
+    if not problems:
+        a, b = canon(sdf), canon(odf)
+        try:
+            pd.testing.assert_frame_equal(a, b, check_dtype=False,
+                                          check_exact=False, atol=1e-9)
+        except AssertionError as e:
+            problems.append("values: " + str(e).split("\n")[0])
+            diff = pd.concat([a, b]).drop_duplicates(keep=False)
+            if len(diff):
+                problems.append("sample diff:\n" + diff.head(6).to_string())
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -42,10 +75,7 @@ def main() -> int:
     spark = get_spark("check_entry", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+    con = oracle_views(sf_dir)
     qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
@@ -67,21 +97,7 @@ def main() -> int:
             failures.append(name)
             print(f"[ORACLE-ERR] {name}: {type(e).__name__}: {str(e)[:300]}")
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if not problems:
-            a, b = canon(sdf), canon(odf)
-            try:
-                pd.testing.assert_frame_equal(a, b, check_dtype=False,
-                                              check_exact=False, atol=1e-9)
-            except AssertionError as e:
-                problems.append("values: " + str(e).split("\n")[0])
-                diff = pd.concat([a, b]).drop_duplicates(keep=False)
-                if len(diff):
-                    problems.append("sample diff:\n" + diff.head(6).to_string())
+        problems = mismatches(sdf, odf)
         if problems:
             failures.append(name)
             print(f"[FAIL] {name}: " + "; ".join(problems))
