@@ -304,7 +304,7 @@ def q_doc_ngram_jaccard(spark, sf_dir):
     aug = _spread_if_large(spark, sf_dir, "documents", d.unionByName(near))
     return (
         ngram_jaccard_pairs(aug, "doc_id", "text", k=3, prefix_tokens=5,
-                            threshold=0.3)
+                            threshold=0.3)[0]
         .select(
             F.col("id_l").cast("long").alias("id_l"),
             F.col("id_r").cast("long").alias("id_r"),
@@ -472,8 +472,8 @@ def q_doc_fuzzy_survivors(spark, sf_dir):
         F.concat(F.col("text"), F.lit(" zz extra tail token")).alias("text"),
     )
     aug = _spread_if_large(spark, sf_dir, "documents", d.unionByName(near))
-    pairs = ngram_jaccard_pairs(aug, "doc_id", "text", k=3, prefix_tokens=5,
-                                threshold=0.3)
+    pairs, _ = ngram_jaccard_pairs(aug, "doc_id", "text", k=3,
+                                   prefix_tokens=5, threshold=0.3)
     return drop_near_duplicates(aug.select("doc_id"), pairs, "doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"))
 
@@ -640,7 +640,7 @@ def q_doc_substring_sa(spark, sf_dir):
         F.col("doc_id").cast("string").alias("id"),
         F.lower(F.col("text")).alias("norm_caption"),
     )
-    pairs = winnowed_substring_pairs(aug, min_len=45)
+    pairs, _ = winnowed_substring_pairs(aug, min_len=45)
     # pair orientation inside the op is string-lexicographic; the
     # oracle compares numeric ids — re-canonicalize numerically
     l_ = F.col("id_l").cast("long")
@@ -689,7 +689,6 @@ def q_pipeline_incremental(spark, sf_dir):
     pipe = DedupPipeline(
         DedupConfig(seen_hashes_path=seen_dir),
         families=("exact",),
-        verify_pixels=False,
         collect_metrics=False,
     )
     res = pipe.run(spark, corpus)

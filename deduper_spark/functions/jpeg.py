@@ -41,6 +41,8 @@ from functools import lru_cache
 
 import numpy as np
 
+from deduper_spark.functions.phash import _dct_matrix
+
 # ------------------------------------------------------------------ tables
 # ITU-T T.81 Annex K.1 — example quantization tables
 Q_LUM = np.array([
@@ -113,14 +115,6 @@ AC_CHROM = ([0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77], [
     0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ])
-
-
-def _dct_matrix(n: int = 8) -> np.ndarray:
-    k = np.arange(n)[:, None]
-    i = np.arange(n)[None, :]
-    m = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * i + 1) * k / (2.0 * n))
-    m[0, :] = np.sqrt(1.0 / n)
-    return m
 
 
 _D8 = _dct_matrix(8)

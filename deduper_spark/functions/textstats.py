@@ -32,39 +32,14 @@ def token_count_expr(text: str | Column) -> Column:
     )
 
 
-def punct_ratio_expr(text: str | Column) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    n_punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
-    return F.round(n_punct / F.greatest(F.length(t), F.lit(1)), 6)
-
-
-def stopword_ratio_expr(tokens: Column, lang: str = "en") -> Column:
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(tokens, lambda x: F.array_contains(sw, x)))
-    return F.round(hits / F.greatest(F.size(tokens), F.lit(1)), 6)
-
-
-def quality_score_expr(text: str | Column) -> Column:
-    """Composite [0,1] quality score: favors mid-length docs, low punct
-    density, presence of stopwords. Formula mirrored in oracle SQL."""
-    t = F.col(text) if isinstance(text, str) else text
-    tokens = F.split(F.lower(F.trim(t)), r"\s+")
-    n_tok = token_count_expr(t).cast("double")
-    len_score = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-    punct_pen = punct_ratio_expr(t)
-    sw_score = F.least(stopword_ratio_expr(tokens) * 5.0, F.lit(1.0))
-    return F.round(
-        (len_score * 0.5 + sw_score * 0.3 + (1.0 - punct_pen) * 0.2), 6
-    )
-
-
 def quality_micro_expr(text: str | Column) -> Column:
     """Integer-exact quality score in micro-units [0, 1_000_000].
 
-    Same shape as quality_score_expr (length part w=0.5, stopword part
-    w=0.3, punctuation part w=0.2) but composed ONLY from BIGINT
-    arithmetic + floor division, so any ANSI engine reproduces it
-    bit-for-bit — floats never belong in hash-compared outputs:
+    Favors mid-length docs, presence of stopwords and low punctuation
+    density (length part w=0.5, stopword part w=0.3, punctuation part
+    w=0.2), composed ONLY from BIGINT arithmetic + floor division, so
+    any ANSI engine reproduces it bit-for-bit — floats never belong in
+    hash-compared outputs:
 
         min(n_tok * 10_000, 500_000)
       + min(floor(sw_hits * 1_500_000 / n_split), 300_000)

@@ -26,6 +26,7 @@ from deduper_spark.operators.cc import connected_components
 from deduper_spark.operators.exact import ExactDedupResult, exact_dedup
 from deduper_spark.operators.lsh import (
     array_band_buckets,
+    block_pairs,
     bucket_groups,
     bucket_pair_rows,
     bucket_stars,
@@ -119,7 +120,7 @@ def simhash_doc_pairs(df: DataFrame, id_col: str = "doc_id",
     """(id_l, id_r, hamming) — SimHash near-dup doc pairs.
 
     The fingerprint RIDES the bucket row and `bit_count(xor) <= t`
-    evaluates inside the self-join's codegen stage
+    evaluates inside the pair enumeration's codegen stage
     (lsh.hamming_candidate_pairs), so the 16-bit band flood (a 65,536-
     value bucket space at corpus scale — measured 26.7M junk candidate
     pairs at n=400k) dies before the pair-dedup shuffle. No features
@@ -139,37 +140,23 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                         threshold: float = 0.5,
                         max_block_size: int = 2000,
                         max_task_rows: int = 512,
-                        return_dropped: bool = False):
+                        ) -> tuple[DataFrame, DataFrame]:
     """Blocked exact n-gram Jaccard (SQL-expressible — the DuckDB
     oracle recomputes it): block on the first ``prefix_tokens`` tokens,
     then exact token-k-gram Jaccard within each block.
 
-    Hot-block cap: a block of size s is s(s-1)/2 pairs in one task, and
-    templated corpora (boilerplate openings) concentrate the corpus
-    into a few blocks. Blocks larger than ``max_block_size`` are
-    DROPPED from pairing — not salted, because the prefix block is the
-    only chance a pair gets (no other band catches it), so salting
-    would silently split true pairs; an over-cap prefix is a stop-
-    pattern, not a duplicate signal. Dropped blocks are returned
-    (``return_dropped=True`` -> (pairs, dropped(block, block_size))) so
-    the caller can meter skipped work, matching candidate_pairs.
+    Pairing is lsh.block_pairs with key ``block``: the prefix block is
+    the only chance a pair gets (no other band catches it), so every
+    in-block pair is compared exactly once, with per-task work bounded
+    by ``max_task_rows``; blocks over ``max_block_size`` are stop-
+    patterns, dropped and returned. The rounded Jaccard is the pair
+    predicate, evaluated inside the enumeration.
 
-    Task-size control: an admitted block of size s is s(s-1)/2 exact
-    gram-set comparisons, and before round 5 they all landed in ONE
-    task (worst case max_block_size²/2 ≈ 2M at the default 2000).
-    Blocks larger than ``max_task_rows`` are now spread by the SAME
-    triangle-block decomposition as hamming_candidate_pairs
-    (lsh.py:187-229): each member gets a sub-block index
-    u = pmod(xxhash64(id), n_sub) with n_sub = ceil(s/max_task_rows)
-    and replicates into the blocks {(min(u,k), max(u,k)) : k < n_sub},
-    so EVERY intra-block pair lands in exactly one (bu, bv) cell —
-    the all-pairs semantics the DuckDB oracle checks are preserved
-    bit-for-bit while per-cell work is bounded by ~max_task_rows².
-    Cold blocks (s <= max_task_rows) take the same path with n_sub=1
-    — a single (0,0) cell, no row multiplication."""
-    # pinned (r6): feats feeds the sizing agg and both join sides — the
-    # normalize+shingle expression tree otherwise executes three times.
-    # Lazy checkpoint, materialized by the sizing aggregation.
+    Returns (pairs(id_l < id_r, jaccard), dropped(block, bucket_size)).
+    """
+    # pinned (r6): feats feeds the sizing agg and the join back — the
+    # normalize+shingle expression tree otherwise executes twice. Lazy
+    # checkpoint, materialized by the sizing aggregation.
     feats = (
         df.select(F.col(id_col).alias("id"), normalize_expr(text_col).alias("t"))
         .withColumn("toks", F.split("t", " "))
@@ -178,54 +165,18 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         .select("id", "block", "grams")
         .localCheckpoint(eager=False)
     )
-    sizes = feats.groupBy("block").agg(F.count("*").alias("block_size"))
-    admitted = sizes.where(
-        (F.col("block_size") > 1) & (F.col("block_size") <= max_block_size)
+
+    def jaccard(lm, rm):
+        inter = F.size(F.array_intersect(lm["grams"], rm["grams"]))
+        union = F.size(F.array_union(lm["grams"], rm["grams"]))
+        return [F.round(inter / F.greatest(union, F.lit(1)), 6).alias("jaccard")]
+
+    pairs, dropped = block_pairs(
+        feats, ["block"], max_block_size, max_task_rows,
+        members=("grams",), fields=jaccard,
+        keep=lambda p: p["jaccard"] >= threshold,
     )
-    dropped = sizes.where(F.col("block_size") > max_block_size)
-    n_sub = F.ceil(F.col("block_size") / F.lit(max_task_rows)).cast("int")
-    b = (
-        feats.join(admitted, "block")
-        .withColumn("n_sub", n_sub)
-        .withColumn("u", F.pmod(F.xxhash64("id"), F.col("n_sub")).cast("int"))
-        .drop("block_size")
-    )
-    blocks = F.transform(
-        F.sequence(F.lit(0), F.col("n_sub") - 1),
-        lambda j: F.struct(
-            F.least(F.col("u"), j).alias("bu"),
-            F.greatest(F.col("u"), j).alias("bv"),
-        ),
-    )
-    b = (b.select("id", "block", "grams", "u", F.explode(blocks).alias("blk"))
-         .select("id", "block", "grams", "u",
-                 F.col("blk.bu").alias("bu"), F.col("blk.bv").alias("bv")))
-    jkey = ["block", "bu", "bv"]
-    left = (b.where(F.col("u") == F.col("bu"))
-            .select(*jkey, F.col("id").alias("id_l"),
-                    F.col("grams").alias("g_l")))
-    right = (b.where(F.col("u") == F.col("bv"))
-             .select(*jkey, F.col("id").alias("id_r"),
-                     F.col("grams").alias("g_r")))
-    inter = F.size(F.array_intersect("g_l", "g_r"))
-    union = F.size(F.array_union("g_l", "g_r"))
-    # diagonal cells pair a sub-block with itself: dedup by id order.
-    # Cross cells meet each pair exactly once by construction, but a
-    # legit pair may arrive as id_l > id_r — canonicalize after the
-    # jaccard (which is symmetric) so the output contract (id_l < id_r)
-    # holds either way.
-    pair_filter = (F.col("bu") != F.col("bv")) | (F.col("id_l") < F.col("id_r"))
-    pairs = (
-        left.join(right, jkey)
-        .where(pair_filter)
-        .withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select(F.least("id_l", "id_r").alias("id_l"),
-                F.greatest("id_l", "id_r").alias("id_r"),
-                "jaccard")
-    )
-    dropped = dropped.select("block", "block_size")
-    return (pairs, dropped) if return_dropped else pairs
+    return pairs.select("id_l", "id_r", "jaccard"), dropped
 
 
 def minhash_doc_clusters(df: DataFrame, id_col: str = "doc_id",
@@ -334,7 +285,6 @@ def lsh_tables_for_recall(threshold: float, n_planes: int,
 
 def embedding_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                            vec_col: str = "embedding",
-                           block_col: str | None = None,
                            threshold: float = 0.95,
                            n_planes: int = 16,
                            probe_radius: int = 1,
@@ -343,8 +293,8 @@ def embedding_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                            seed: int = 42) -> DataFrame:
     """Embedding-cosine near-dup pairs.
 
-    Default blocker: ``n_tables`` independent hyperplane-LSH tables
-    (sign random projection, operators/ann.py), each probed within
+    Blocker: ``n_tables`` independent hyperplane-LSH tables (sign
+    random projection, operators/ann.py), each probed within
     Hamming <= probe_radius (multiprobe). One table alone is NOT
     near-exhaustive away from threshold ~1.0 — at threshold 0.95 a
     boundary pair splits each of 16 planes with p~0.10, so a single
@@ -352,18 +302,21 @@ def embedding_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     fixes that: with ``n_tables=None`` the table count is derived from
     the threshold (lsh_tables_for_recall) so a pair AT the threshold is
     missed with probability <= ``target_miss`` (1% default); pairs
-    above the threshold do strictly better. ``block_col`` substitutes a
-    semantic blocker (test harness / pre-computed IVF cell).
+    above the threshold do strictly better.
 
     Bucket size stays bounded (2^-n_planes of the corpus per table in
     expectation); candidate generation is ids-only (the explode factor
     n_tables*(1+n_planes) rides 16 B rows, never vectors); dot products
     via zip_with+aggregate — JVM-side, no Python in the pair join.
     """
+    from deduper_spark.operators.ann import (
+        hyperplane_signatures_udf,
+        probe_masks,
+    )
+
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-        *([F.col(block_col).alias("block")] if block_col else []),
     ).withColumn(
         "norm",
         F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0),
@@ -373,60 +326,48 @@ def embedding_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
         F.zip_with("v_l", "v_r", lambda a, b: a * b), F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    if not block_col:
-        from deduper_spark.operators.ann import (
-            hyperplane_signatures_udf,
-            probe_masks,
+    if n_tables is None:
+        n_tables = lsh_tables_for_recall(threshold, n_planes,
+                                         probe_radius, target_miss)
+    # dim inferred lazily inside the UDF (ann.py, r6): the former
+    # limit(1).collect() dim probe was a blocking driver job per
+    # call, and the empty-input special case it served is covered
+    # by the normal (empty) pair flow
+    sigs = hyperplane_signatures_udf(None, n_planes, n_tables, seed)
+    # candidate generation on IDS ONLY (16 B/row through the bucket
+    # join + pair dedupe); the 8 B x dim vectors join back by id
+    # AFTER dedupe — never shuffled per-probe or per-duplicate-pair
+    ids = base.withColumn("sigs", sigs("v")).select("id", "sigs")
+    masks = F.array(*[F.lit(m) for m in probe_masks(n_planes, probe_radius)])
+    left = (
+        ids.select(
+            F.col("id").alias("id_l"),
+            F.posexplode("sigs").alias("table", "sig"),
         )
-
-        if n_tables is None:
-            n_tables = lsh_tables_for_recall(threshold, n_planes,
-                                             probe_radius, target_miss)
-        # dim inferred lazily inside the UDF (ann.py, r6): the former
-        # limit(1).collect() dim probe was a blocking driver job per
-        # call, and the empty-input special case it served is covered
-        # by the normal (empty) pair flow
-        sigs = hyperplane_signatures_udf(None, n_planes, n_tables, seed)
-        # candidate generation on IDS ONLY (16 B/row through the bucket
-        # join + pair dedupe); the 8 B x dim vectors join back by id
-        # AFTER dedupe — never shuffled per-probe or per-duplicate-pair
-        ids = base.withColumn("sigs", sigs("v")).select("id", "sigs")
-        masks = F.array(*[F.lit(m) for m in probe_masks(n_planes, probe_radius)])
-        left = (
-            ids.select(
-                F.col("id").alias("id_l"),
-                F.posexplode("sigs").alias("table", "sig"),
-            )
-            .select(
-                "id_l", "table",
-                F.explode(
-                    F.transform(masks, lambda m: F.col("sig").bitwiseXOR(m))
-                ).alias("block"),
-            )
+        .select(
+            "id_l", "table",
+            F.explode(
+                F.transform(masks, lambda m: F.col("sig").bitwiseXOR(m))
+            ).alias("block"),
         )
-        right = ids.select(
-            F.col("id").alias("id_r"),
-            F.posexplode("sigs").alias("table", "block"),
-        )
-        cand = (
-            left.join(right, ["table", "block"])
-            .where(F.col("id_l") < F.col("id_r"))
-            .select("id_l", "id_r")
-            .dropDuplicates(["id_l", "id_r"])
-        )
-        pairs = cand.join(
-            base.select(F.col("id").alias("id_l"), F.col("v").alias("v_l"),
-                        F.col("norm").alias("n_l")), "id_l"
-        ).join(
-            base.select(F.col("id").alias("id_r"), F.col("v").alias("v_r"),
-                        F.col("norm").alias("n_r")), "id_r"
-        )
-    else:
-        left = base.select(F.col("id").alias("id_l"), F.col("v").alias("v_l"),
-                           F.col("norm").alias("n_l"), "block")
-        right = base.select(F.col("id").alias("id_r"), F.col("v").alias("v_r"),
-                            F.col("norm").alias("n_r"), "block")
-        pairs = left.join(right, "block").where(F.col("id_l") < F.col("id_r"))
+    )
+    right = ids.select(
+        F.col("id").alias("id_r"),
+        F.posexplode("sigs").alias("table", "block"),
+    )
+    cand = (
+        left.join(right, ["table", "block"])
+        .where(F.col("id_l") < F.col("id_r"))
+        .select("id_l", "id_r")
+        .dropDuplicates(["id_l", "id_r"])
+    )
+    pairs = cand.join(
+        base.select(F.col("id").alias("id_l"), F.col("v").alias("v_l"),
+                    F.col("norm").alias("n_l")), "id_l"
+    ).join(
+        base.select(F.col("id").alias("id_r"), F.col("v").alias("v_r"),
+                    F.col("norm").alias("n_r")), "id_r"
+    )
     return (
         pairs
         .withColumn("cosine", F.round(dot / (F.col("n_l") * F.col("n_r")), 6))

@@ -23,11 +23,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from deduper_spark.functions.keys import md5_key_expr, resolve_hash_keys
 from deduper_spark.report import DedupeReport
+
+# A report lists each dupe group's detail only up to this many groups.
+MAX_COLLECTED_GROUPS = 1000
 
 
 @dataclass
@@ -56,7 +59,6 @@ def exact_dedup(
     order_col: str | None = None,
     ordinal_col: str = "row_ordinal",
     include_json: bool = True,
-    hash_expr: Column | None = None,
 ) -> ExactDedupResult:
     """Build the full exact-dedup DAG (no actions triggered).
 
@@ -65,7 +67,7 @@ def exact_dedup(
     """
     cols = [c for c in df.columns if c != ordinal_col]
     keys = resolve_hash_keys(df.select(cols), hash_keys)
-    key_expr = hash_expr if hash_expr is not None else md5_key_expr(keys)
+    key_expr = md5_key_expr(keys)
 
     if ordinal_col not in df.columns:
         if order_col is None:
@@ -129,7 +131,6 @@ def build_report(
     columns: list[str],
     preloaded_hash_count: int = 0,
     collect_dupes: bool = True,
-    max_collected_groups: int = 1000,
 ) -> DedupeReport:
     """One small aggregation action → DedupeReport (Deduper.kt:42-60).
 
@@ -149,7 +150,7 @@ def build_report(
     dupe_count = record_count - surviving
 
     dupes: dict[str, dict] = {}
-    if collect_dupes and distinct_dupe_count <= max_collected_groups:
+    if collect_dupes and distinct_dupe_count <= MAX_COLLECTED_GROUPS:
         for r in result.dupe_groups.collect():
             dupes[r["hash"]] = {
                 "row_ids": r["row_ids"],

@@ -1,27 +1,47 @@
-"""LSH banding + candidate-pair generation with explicit skew control.
+"""LSH banding and the hot-group handling shared by every blocker.
 
 Generalizes the blocking role of the reference's exact hash-bucket
-lookup (seenHashes keyed membership, Deduper.kt:207) to locality-
-sensitive buckets: rows sharing any (band, bucket) become candidate
-pairs; verification (verify.py) then confirms or rejects.
+lookup (seenHashes keyed membership, Deduper.kt:207) to buckets: rows
+sharing a key — an LSH (family, band, bucket), an n-gram prefix block,
+a winnow fingerprint, a containment anchor — become candidate pairs,
+and verification (verify.py, or the caller's own predicate) confirms
+or rejects them.
 
 Scale design (the part that has to survive 100 TB):
   * banding is a single projection + posexplode — no shuffle;
-  * pairs come from grouping each (family, band, bucket): one hash
-    Exchange (bucket_groups), with the i<j pairs enumerated inside
-    codegen (bucket_pair_rows). A caller that needs only connectivity
-    reads a spanning star per group instead (bucket_stars) — from the
-    same grouping, so one pinned grouping serves both;
-  * HOT BUCKETS (stop-shingle bands, constant captions) are the skew
-    killer: a bucket of size s yields s(s-1)/2 pairs. Buckets larger
-    than max_bucket_size are salted into sub-buckets of about that
-    size; buckets larger than SALT_CAP are stop-patterns, dropped from
-    pairing and reported rather than silently eaten.
+  * ONE ADMISSION STEP (_admit) sizes every group: groups of 2..cap
+    members are admitted, tagged ``bucket_size``; larger groups are
+    stop-patterns (boilerplate shingles, constant captions, license
+    headers), dropped from pairing and returned as key + bucket_size,
+    never silently eaten. A group of s members is s(s-1)/2 pairs, so a
+    hot group would dominate the job AND pin one task;
+  * an admitted group larger than the per-task size is split by one of
+    two policies:
+      - SALTED (bucket_groups: MinHash). A hot bucket is hashed into
+        ceil(s/max) sub-buckets, and a pair split across two of them is
+        lost. That is acceptable because a true MinHash pair shares
+        many bands, so a colder band still catches it;
+      - EXACT (block_pairs: Hamming LSH, n-gram blocks, winnow
+        fingerprints). A pair may share ONE key only — a Hamming pair
+        at n_bands-1 shares exactly one band (pigeonhole), a prefix
+        block or a fingerprint may be a pair's only match — so every
+        in-group pair must be compared exactly once. Members get a
+        sub-group u = pmod(xxhash64(id), n_sub) and are replicated
+        into the triangle cells {(min(u,k), max(u,k)) : k < n_sub};
+        cell (a, a) pairs sub-group a with itself, cell (a, b) pairs
+        a x b. The comparison count is unchanged; per-task work is
+        bounded by ~max_cell²;
+  * pairs come from GROUPING, not self-joining: one hash Exchange per
+    blocker, with the pairs enumerated inside codegen (_upper_pairs);
+    a caller that needs only connectivity reads a spanning star per
+    group instead (bucket_stars);
   * pair de-dup across bands/families is a groupBy on (id_l, id_r) —
     again hash-partitioned, no global structure.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,21 +51,117 @@ from pyspark.sql import functions as F
 # dropped from pairing and reported.
 SALT_CAP = 20_000
 
+BAND_KEY = ["family", "band", "bucket"]
 
-def _admit(buckets: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Size each (family, band, bucket) group: returns the rows of the
-    buckets with 2..SALT_CAP members, tagged with ``bucket_size``, and
-    the (family, band, bucket, bucket_size) rows of the dropped ones."""
-    key = ["family", "band", "bucket"]
-    sizes = buckets.groupBy(*key).agg(F.count("*").alias("bucket_size"))
+
+def _admit(rows: DataFrame, key: list[str],
+           cap: int) -> tuple[DataFrame, DataFrame]:
+    """Size each ``key`` group: returns the rows of the groups with
+    2..cap members, tagged with ``bucket_size``, and the (key...,
+    bucket_size) rows of the dropped ones (more than ``cap``)."""
+    sizes = rows.groupBy(*key).agg(F.count("*").alias("bucket_size"))
     admitted = sizes.where(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= SALT_CAP)
+        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cap)
     )
-    dropped = sizes.where(F.col("bucket_size") > SALT_CAP)
-    # NB not broadcast: `admitted` has one row per distinct bucket —
-    # billions at corpus scale. Equi-join on the bucket key co-shuffles
-    # with the pairing groupBy; AQE broadcasts it when it is in fact small.
-    return buckets.join(admitted.select(*key, "bucket_size"), key), dropped
+    dropped = sizes.where(F.col("bucket_size") > cap)
+    # NB not broadcast: `admitted` has one row per distinct group —
+    # billions at corpus scale. Equi-join on the key co-shuffles with
+    # the pairing groupBy; AQE broadcasts it when it is in fact small.
+    return rows.join(admitted, key), dropped
+
+
+def _upper_pairs(ms: str, pair: Callable[[Column, Column], Column]) -> Column:
+    """pair(x, y) for every position pair i < j of the array ``ms`` —
+    each unordered pair of its elements exactly once, enumerated with a
+    nested array transform inside codegen."""
+    n = F.size(ms)
+    return F.flatten(
+        F.transform(
+            ms,
+            lambda x, i: F.transform(
+                F.slice(ms, i + F.lit(2), n - i - F.lit(1)),
+                lambda y: pair(x, y),
+            ),
+        )
+    )
+
+
+def block_pairs(
+    rows: DataFrame,
+    key: list[str],
+    cap: int,
+    max_cell: int,
+    members: tuple[str, ...] = (),
+    fields: Callable[[Column, Column], list[Column]] = lambda lm, rm: [],
+    keep: Callable[[Column], Column] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Every pair of rows sharing a ``key`` group, exactly once — the
+    EXACT hot-group policy of the module docstring.
+
+    rows: key columns, ``id`` and the ``members`` columns the pair
+    expressions read. Groups are admitted by _admit(rows, key, cap); an
+    admitted group of s members is split into n_sub = ceil(s /
+    max_cell) sub-groups and their triangle cells, and one groupBy on
+    key + (bu, bv) collects each cell — at most ~2 x max_cell members.
+    Inside the enumeration, diagonal cells (bu == bv) pair positions
+    i < j and cross cells pair the u == bu members against the u == bv
+    ones (disjoint sets), so each pair meets once. Cold groups take the
+    same path with n_sub = 1: one (0, 0) cell, no row multiplication.
+
+    ``fields(lm, rm)`` adds named columns computed from the two member
+    structs (id + members); ``keep(p)`` filters on the pair struct
+    (id_l, id_r, fields...) before it leaves the cell, so false
+    candidates die before any downstream shuffle. A row never pairs
+    with a row of the same id.
+
+    Returns (pairs(key..., id_l < id_r, fields...), dropped(key...,
+    bucket_size)). A pair sharing several groups appears once per group.
+    """
+    b, dropped = _admit(rows, key, cap)
+    n_sub = F.ceil(F.col("bucket_size") / F.lit(max_cell)).cast("int")
+    b = (
+        b.withColumn("n_sub", n_sub)
+        .withColumn("u", F.pmod(F.xxhash64("id"),
+                                F.col("n_sub")).cast("int"))
+        .drop("bucket_size")
+    )
+    cells = F.transform(
+        F.sequence(F.lit(0), F.col("n_sub") - 1),
+        lambda k: F.struct(
+            F.least(F.col("u"), k).alias("bu"),
+            F.greatest(F.col("u"), k).alias("bv"),
+        ),
+    )
+    cols = [*key, "id", *members, "u"]
+    b = b.select(*cols, F.explode(cells).alias("cell")) \
+         .select(*cols, "cell.bu", "cell.bv")
+    grp = b.groupBy(*key, "bu", "bv").agg(
+        F.collect_list(F.struct("id", *members, "u")).alias("ms"))
+
+    def pair(lm: Column, rm: Column) -> Column:
+        return F.struct(
+            F.least(lm["id"], rm["id"]).alias("id_l"),
+            F.greatest(lm["id"], rm["id"]).alias("id_r"),
+            *fields(lm, rm),
+        )
+
+    lefts = F.filter("ms", lambda m: m["u"] == F.col("bu"))
+    rights = F.filter("ms", lambda m: m["u"] == F.col("bv"))
+    cross = F.flatten(
+        F.transform(lefts, lambda lm: F.transform(rights,
+                                                  lambda rm: pair(lm, rm)))
+    )
+    def ok(p: Column) -> Column:
+        distinct = p["id_l"] < p["id_r"]
+        return distinct & keep(p) if keep else distinct
+
+    arr = F.filter(
+        F.when(F.col("bu") == F.col("bv"), _upper_pairs("ms", pair))
+        .otherwise(cross),
+        ok,
+    )
+    pairs = grp.select(*key, F.explode(arr).alias("p")).select(*key, "p.*")
+    return pairs, dropped
 
 
 def array_band_buckets(df: DataFrame, id_col: str, buckets_col: str,
@@ -73,7 +189,8 @@ def int64_band_buckets(
     With ``max_hamming`` set, the bucket row also CARRIES the full
     fingerprint and its verification threshold (16 extra bytes), which
     lets hamming_candidate_pairs evaluate the exact predicate inline in
-    the self-join — see its docstring for why that matters at scale."""
+    the pair enumeration — see its docstring for why that matters at
+    scale."""
     fam0 = family if isinstance(family, Column) else F.lit(family)
     if max_hamming == 0:
         # Exact-fingerprint candidates (r6, guide §2.5 "skew — hot
@@ -132,7 +249,7 @@ def hamming_candidate_pairs(
     with_distance: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """candidate_pairs for Hamming families (simhash/phash), with the
-    exact predicate evaluated INLINE in the co-located self-join.
+    exact predicate evaluated INLINE in the pair enumeration.
 
     Why this exists: 16-bit band buckets flood at corpus scale (a
     65,536-value bucket space holds n >> 2^16 rows — measured 33M
@@ -140,115 +257,32 @@ def hamming_candidate_pairs(
     every such pair to a features join (2 x shingle arrays ≈ 400 B per
     pair) made verification the dominant shuffle. Here the bucket row
     carries the 8-byte fingerprint + threshold, so
-    `bit_count(val_l ^ val_r) <= max_ham` runs inside the join's
+    `bit_count(val_l ^ val_r) <= max_ham` runs inside block_pairs'
     codegen stage and false candidates die BEFORE the pair-dedup
     shuffle — the downstream groupBy sees ~confirmed pairs only.
 
-    buckets: (family, band, bucket, id, val, max_ham). Sizing and
-    hot-bucket accounting are identical to candidate_pairs, but a hot
-    bucket is split by a TRIANGLE-BLOCK decomposition, not scalar
-    salting: its members get a sub-bucket index u =
-    pmod(xxhash64(id), n_sub), and each row is replicated into the
-    n_sub blocks {(min(u,k), max(u,k)) : k < n_sub}; block (a, a)
-    pairs sub-bucket a with itself, block (a, b) with a < b pairs
-    sub-buckets a x b. EVERY intra-bucket pair lands in exactly one
-    block, so the
-    pigeonhole recall guarantee (a pair at Hamming n_bands-1 shares
-    exactly ONE band) survives hot buckets — scalar salting could
-    split that pair's single shared bucket and silently lose it. Cost:
-    the total comparison count is unchanged (it is the price of the
-    guarantee), but per-task work is bounded by ~max_bucket_size² and
-    the s²/2 comparisons of an s-member bucket spread across
-    n_sub(n_sub+1)/2 tasks instead of pinning one. Buckets beyond
-    ``SALT_CAP`` are stop-patterns and are still dropped + metered.
+    buckets: (family, band, bucket, id, val, max_ham). Hot buckets are
+    split exactly (block_pairs), so the pigeonhole recall guarantee (a
+    pair at Hamming n_bands-1 shares exactly ONE band) survives them;
+    buckets beyond ``SALT_CAP`` are stop-patterns, dropped + metered.
 
     Returns (pairs(id_l, id_r, families), dropped_buckets);
     ``with_distance`` adds the pair's Hamming distance (min across
     families — for a single-family input it IS the distance).
     """
-    key = ["family", "band", "bucket"]
-    b, dropped = _admit(buckets)
-    # Cold buckets (the overwhelming majority) take this path too:
-    # n_sub=1, u=0, a single (0,0) block — no row multiplication,
-    # and the grouping distribution on key+(bu,bv) equals the
-    # unsalted key distribution, so the only cost is per-row
-    # expression work (xxhash64 + one-element explode) inside the
-    # same codegen stage. A hot/cold split was considered and
-    # declined: it doubles the plan for a constant-factor win the
-    # benches don't show.
-    n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size)) \
-        .cast("int")
-    b = (
-        b.withColumn("n_sub", n_sub)
-        .withColumn("u", F.pmod(F.xxhash64("id"),
-                                F.col("n_sub")).cast("int"))
-        .drop("bucket_size")
-    )
-    blocks = F.transform(
-        F.sequence(F.lit(0), F.col("n_sub") - 1),
-        lambda k: F.struct(
-            F.least(F.col("u"), k).alias("bu"),
-            F.greatest(F.col("u"), k).alias("bv"),
-        ),
-    )
-    b = b.select(*key, "id", "val", "max_ham", "u",
-                 F.explode(blocks).alias("blk")) \
-         .select(*key, "id", "val", "max_ham", "u",
-                 F.col("blk.bu").alias("bu"), F.col("blk.bv").alias("bv"))
-    jkey = key + ["bu", "bv"]
-
-    # Pair generation by GROUPING (r6, guide §2.4), mirroring
-    # candidate_pairs: each triangle cell collects its members —
-    # bounded by ~2x max_bucket_size by construction — and enumerates
-    # its pairs with nested array transforms INSIDE codegen, the exact
-    # Hamming predicate applied in the same expression. One hash
-    # Exchange (the groupBy) replaces the former self-join's two, the
-    # cell rows are evaluated once instead of once per join side, and
-    # false candidates still die before the pair-dedup shuffle.
-    # Diagonal cells (bu==bv) pair positions i<j — each unordered pair
-    # exactly once; cross cells pair the u==bu members against the
-    # u==bv members — disjoint sets, each pair once, orientation
-    # canonicalized by least/greatest exactly as the join did.
-    grp = b.groupBy(*jkey).agg(
-        F.collect_list(F.struct("id", "val", "u")).alias("ms"),
-        F.max("max_ham").alias("mh"),
-    )
-
-    def _pair(lm, rm):
-        return F.struct(
-            F.least(lm["id"], rm["id"]).alias("id_l"),
-            F.greatest(lm["id"], rm["id"]).alias("id_r"),
+    cand, dropped = block_pairs(
+        buckets, BAND_KEY, SALT_CAP, max_bucket_size,
+        members=("val", "max_ham"),
+        fields=lambda lm, rm: [
             F.bit_count(lm["val"].bitwiseXOR(rm["val"])).alias("dist"),
-        )
-
-    n = F.size("ms")
-    diag = F.flatten(
-        F.transform(
-            "ms",
-            lambda x, i: F.transform(
-                F.slice("ms", i + F.lit(2), n - i - F.lit(1)),
-                lambda y: _pair(x, y),
-            ),
-        )
-    )
-    lefts = F.filter("ms", lambda m: m["u"] == F.col("bu"))
-    rights = F.filter("ms", lambda m: m["u"] == F.col("bv"))
-    cross = F.flatten(
-        F.transform(lefts, lambda lm: F.transform(rights,
-                                                  lambda rm: _pair(lm, rm)))
-    )
-    arr = F.filter(
-        F.when(F.col("bu") == F.col("bv"), diag).otherwise(cross),
-        lambda p: p["dist"] <= F.col("mh"),
-    )
-    joined = (
-        grp.select("family", F.explode(arr).alias("p"))
-        .select("p.id_l", "p.id_r", "family", "p.dist")
+            lm["max_ham"].alias("max_ham"),
+        ],
+        keep=lambda p: p["dist"] <= p["max_ham"],
     )
     aggs = [F.collect_set("family").alias("families")]
     if with_distance:
         aggs.append(F.min("dist").alias("dist"))
-    pairs = joined.groupBy("id_l", "id_r").agg(*aggs)
+    pairs = cand.groupBy("id_l", "id_r").agg(*aggs)
     return pairs, dropped
 
 
@@ -260,18 +294,13 @@ def bucket_groups(
     salt, ids) — one row per admitted (sub-)bucket, holding its member
     ids — and the dropped-bucket metrics.
 
-    Skew defusal (SURVEY.md §7 hard part (d); north rule "salted
-    repartitioning"): a bucket of size s yields s(s-1)/2 pairs, so hot
-    buckets (stop shingles, constant captions) would dominate the job
-    AND pin one task. A bucket with size > max_bucket_size is salted
-    into ceil(s/max) sub-buckets via xxhash64(id) — quadratic cost
-    drops to ~s*max/2, the work spreads across the cluster, and pairing
-    inside each sub-bucket is preserved (true dups in a hot bucket
-    nearly always share other, colder buckets too, so pair recall loss
-    is negligible — asserted by the recall tests). Buckets beyond
-    ``SALT_CAP`` are stop-patterns and are dropped outright.
+    The SALTED hot-group policy of the module docstring (SURVEY.md §7
+    hard part (d); north rule "salted repartitioning"): a bucket with
+    size > max_bucket_size is salted into ceil(s/max) sub-buckets via
+    xxhash64(id), so its quadratic cost drops to ~s*max/2 and spreads
+    across the cluster; the recall tests assert the loss is negligible.
     """
-    b, dropped = _admit(buckets)
+    b, dropped = _admit(buckets, BAND_KEY, SALT_CAP)
     n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size))
     b = b.withColumn(
         "salt", F.pmod(F.xxhash64("id"), n_sub).cast("int")
@@ -288,20 +317,11 @@ def bucket_groups(
 def bucket_pair_rows(groups: DataFrame) -> DataFrame:
     """(id_l < id_r, family) for every pair inside each group of
     bucket_groups, once per group that holds it: the i<j position
-    pairs, enumerated with a nested array transform inside codegen.
-    Position pairs i<j enumerate each unordered pair exactly once;
-    least/greatest orients it (the former join's id_l < id_r filter
-    did the same)."""
-    n = F.size("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice("ids", i + F.lit(2), n - i - F.lit(1)),
-                lambda y: F.struct(F.least(x, y).alias("id_l"),
-                                   F.greatest(x, y).alias("id_r")),
-            ),
-        )
+    pairs (_upper_pairs), oriented by least/greatest."""
+    pair_structs = _upper_pairs(
+        "ids",
+        lambda x, y: F.struct(F.least(x, y).alias("id_l"),
+                              F.greatest(x, y).alias("id_r")),
     )
     return (
         groups.select("family", F.explode(pair_structs).alias("p"))
@@ -323,7 +343,7 @@ def candidate_pairs(
     buckets: DataFrame,
     max_bucket_size: int = 200,
 ) -> tuple[DataFrame, DataFrame]:
-    """Self-join each (family, band, bucket) group → (id_l < id_r) pairs:
+    """Pair each (family, band, bucket) group → (id_l < id_r) pairs:
     bucket_groups, then bucket_pair_rows, de-duplicated across bands.
 
     Returns (pairs(id_l, id_r, families), dropped_buckets_metrics) —

@@ -24,6 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# Share of co-sampled frame positions two videos must match on
+# (video_dedup_pairs).
+MIN_MATCH_FRAC = 0.8
+
 IMAGE_FEATURE_SCHEMA = (
     "id string, decode_ok boolean, w int, h int, mean_r double, "
     "mean_g double, mean_b double, phash long"
@@ -164,9 +168,9 @@ def dedup_image_dir(spark, path: str, max_hamming: int = 6,
         image source (JVM decode, undecodable files drop at the seam)
         -> image_features_from_source (vectorized phash, no Python
            codec work)
-        -> int64_band_buckets + hamming_candidate_pairs (co-located
-           self-join, inline bit_count predicate, hot buckets salted
-           with the triangle-block recall guarantee)
+        -> int64_band_buckets + hamming_candidate_pairs (one grouping
+           Exchange, inline bit_count predicate, hot buckets split
+           exactly by lsh.block_pairs)
         -> connected_components (per-partition union-find contraction,
            single-task finish)
 
@@ -513,8 +517,8 @@ def audio_dedup_pairs(
     corpus scale, the exact simhash failure class round 2 measured at
     26.7M junk pairs; pigeonhole guarantees recall for Hamming <=
     n_bands-1 = 3 = the default max_hamming — gain-invariant dups sit
-    at 0), then the co-located
-    self-join with the INLINE bit_count predicate — no features join,
+    at 0), then the grouped pair enumeration with the INLINE
+    bit_count predicate — no features join,
     no candidate flood (operators/lsh.py:hamming_candidate_pairs).
     Fingerprints are gain-invariant, so re-mastered/volume-normalized
     copies land at Hamming ~0. Returns (id_l, id_r) canonical pairs."""
@@ -524,7 +528,7 @@ def audio_dedup_pairs(
     )
 
     # pin the decode: hamming_candidate_pairs consumes the bucket rows
-    # three times (sizing agg + both self-join sides) — without the pin
+    # twice (sizing agg + join back) — without the pin
     # the WAV decode + FFT mapInPandas would re-execute each time
     feats = (extract_audio_features(df, id_col, bytes_col,
                                     decode_backend=decode_backend)
@@ -543,18 +547,17 @@ def video_dedup_pairs(
     bytes_col: str = "bytes",
     every_n: int = 2,
     max_hamming: int = 4,
-    min_match_frac: float = 0.8,
     band_bits: int = 16,
     decode_backend: str = "python",
 ) -> DataFrame:
-    """Video near-dup pairs: two videos match when >= min_match_frac of
+    """Video near-dup pairs: two videos match when >= MIN_MATCH_FRAC of
     their co-sampled frame positions have phash-Hamming <= max_hamming
     frames (re-encoded/re-mastered copies pass; unrelated clips don't).
 
     Fully reuses the engine's Hamming-LSH machinery: per-frame phashes
     (zero-transcode sampling, decode only sampled frames) are banded
     with the frame position baked into the bucket FAMILY
-    ("vf:<frame_idx>"), so the co-located self-join only compares
+    ("vf:<frame_idx>"), so the pair enumeration only compares
     same-position frames and the inline bit_count predicate kills
     false candidates before the pair-dedup shuffle. The distinct
     matched frame positions per video pair then come free from the
@@ -587,7 +590,7 @@ def video_dedup_pairs(
         .join(counts.select(F.col("id").alias("id_r"),
                             F.col("n_sampled").alias("n_r")), "id_r")
         .where(matched >= F.ceil(F.least("n_l", "n_r")
-                                 * F.lit(float(min_match_frac))))
+                                 * F.lit(MIN_MATCH_FRAC)))
     )
     return scored.select("id_l", "id_r",
                          matched.alias("matched_frames"), "n_l", "n_r")
@@ -624,8 +627,8 @@ def video_dedup_pairs_shifted(
     ph = (video_frame_phashes(df, id_col, bytes_col, every_n=1,
                               decode_backend=decode_backend)
           .where("decode_ok")
-          .localCheckpoint())   # pin the stride-1 decode (consumed 3x
-    #                             downstream: sizing + both join sides)
+          .localCheckpoint())   # pin the stride-1 decode (consumed 2x
+    #                             downstream: sizing + join back)
     # composite frame id "video#idx" rides through the generic banding
     phf = ph.withColumn(
         "fid", F.concat_ws("#", F.col("id"), F.col("frame_idx")))

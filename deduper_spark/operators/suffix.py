@@ -16,7 +16,8 @@ of text is not a Spark-shaped structure, an inverted anchor index is):
     anchor (first-shingle hash), then confirm with a JVM-side
     `contains(B.caption, A.caption)` — exact, no false positives;
   * the anchor join is hash-partitioned on the shingle hash; hot
-    anchors (stop-phrases) are capped exactly like LSH buckets.
+    anchors (stop-phrases) are admitted by the same step as LSH buckets
+    (lsh._admit).
 """
 
 from __future__ import annotations
@@ -24,13 +25,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deduper_spark.operators.lsh import _admit, block_pairs
+
+# Anchors held by more container rows than this are stop-phrases:
+# dropped from the containment join.
+MAX_ANCHOR_BUCKET = 1000
+
 
 def substring_overlap_pairs(
     df: DataFrame,
     id_col: str = "id",
     text_col: str = "norm_caption",
     min_len: int = 40,
-    shards: int | None = None,
 ) -> DataFrame:
     """Pairs sharing ANY substring of length >= min_len characters —
     the per-shard SUFFIX-ARRAY pass (functions/suffix_array.py:
@@ -38,22 +44,19 @@ def substring_overlap_pairs(
     text), i.e. the exact-substring dedup used on web-scale training
     corpora (catches long verbatim overlaps MinHash misses entirely).
 
-    Scale design: docs are hash-sharded; the SA is built per shard
-    inside mapInPandas (memory ~ O(shard chars)). Detection is
+    Scale design: each input partition is a shard; the SA is built per
+    shard inside mapInPandas (memory ~ O(shard chars)). Detection is
     shard-LOCAL — the EXACT global pass (no cross-shard gap at any
     parallelism) is winnowed_substring_pairs below, which is what the
     driver query and the pipeline use; this per-shard SA pass is the
     within-shard analytics kernel (maximal run structure, full LCP).
-    Each shard's work is independent — no shuffle after the initial
-    hash repartition.
+    Each shard's work is independent — no shuffle.
     """
     from collections.abc import Iterator
 
     import pandas as pd
 
     sel = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    if shards:
-        sel = sel.repartition(shards, F.xxhash64("id"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from deduper_spark.functions.suffix_array import shared_substring_pairs
@@ -77,32 +80,30 @@ def winnowed_substring_pairs(
     min_len: int = 45,
     k: int = 32,
     max_fp_bucket: int = 2000,
-    return_dropped: bool = False,
-):
+) -> tuple[DataFrame, DataFrame]:
     """EXACT distributed substring pass: all pairs sharing any substring
     of length >= min_len — recall 1.0 by the winnowing guarantee
     (functions/winnow.py) AMONG ADMITTED fingerprint buckets, precision
-    1.0 by per-pair literal verification. Buckets larger than
-    ``max_fp_bucket`` are stop-patterns (license headers, boilerplate)
-    and are dropped from pairing — so on boilerplate-heavy corpora the
-    recall-1.0 guarantee is qualified by the cap, and the dropped set
-    is REPORTED (``return_dropped=True`` -> (pairs, dropped(fp, n))),
-    never silently eaten (same contract as lsh.candidate_pairs). The
-    scale-correct successor to the per-shard SA pass: no doc sharding,
-    so there is NO cross-shard recall gap at any parallelism.
+    1.0 by per-pair literal verification. The scale-correct successor
+    to the per-shard SA pass: no doc sharding, so there is NO
+    cross-shard recall gap at any parallelism.
 
     Plan shape (what survives 10^12 rows):
       1. fingerprints: narrow mapInPandas (numpy winnow kernel) →
          (id, fp) exploded, ~2/(W+1) of characters per doc — one
          projection, zero shuffle;
-      2. candidates: one sizing groupBy(fp) + one co-located self-join
-         on fp (identical skew treatment to LSH buckets: buckets over
-         ``max_fp_bucket`` are stop-patterns — boilerplate/license
-         headers — and are dropped, never exploded quadratically);
+      2. candidates: lsh.block_pairs with key ``fp`` and max_cell =
+         ``max_fp_bucket``, so each admitted bucket is one cell. Buckets
+         over ``max_fp_bucket`` are stop-patterns (license headers,
+         boilerplate), dropped from pairing and returned — on
+         boilerplate-heavy corpora the recall-1.0 guarantee is qualified
+         by the cap;
       3. verification: distinct pairs join texts (id-keyed), then an
          Arrow-batched exact check (rolling-hash window intersection
          confirmed against literal characters — suffix-structure
          verification, collision-proof).
+
+    Returns (pairs(id_l, id_r, families), dropped(fp, bucket_size)).
     """
     from collections.abc import Iterator
 
@@ -124,25 +125,16 @@ def winnowed_substring_pairs(
             yield pd.DataFrame({"id": ids, "fp": vals})
 
     # pin the fingerprint pass (r6): buckets feeds the sizing agg AND
-    # both sides of the candidate self-join — unpinned, the Python
-    # winnow kernel ran three times end-to-end (measured ~1.2 s per
-    # pass at sf0.1). Lazy checkpoint: the sizing aggregation is the
+    # the join back to the admitted buckets — unpinned, the Python
+    # winnow kernel ran once per consumer (measured ~1.2 s per pass at
+    # sf0.1). Lazy checkpoint: the sizing aggregation is the
     # materializing action, no extra job.
     buckets = sel.mapInPandas(
         fps, schema="id string, fp long"
     ).localCheckpoint(eager=False)
 
-    sizes = buckets.groupBy("fp").agg(F.count("*").alias("n"))
-    admitted = sizes.where((F.col("n") > 1) & (F.col("n") <= max_fp_bucket))
-    dropped = sizes.where(F.col("n") > max_fp_bucket)
-    b = buckets.join(admitted.select("fp"), "fp")
-    cand = (
-        b.alias("l")
-        .join(b.alias("r"), "fp")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
-        .distinct()
-    )
+    cand, dropped = block_pairs(buckets, ["fp"], max_fp_bucket, max_fp_bucket)
+    cand = cand.select("id_l", "id_r").distinct()
 
     texts_l = sel.select(F.col("id").alias("id_l"), F.col("t").alias("t_l"))
     texts_r = sel.select(F.col("id").alias("id_r"), F.col("t").alias("t_r"))
@@ -163,18 +155,21 @@ def winnowed_substring_pairs(
         verify, schema="id_l string, id_r string"
     )
     pairs = verified.withColumn("families", F.array(F.lit("substring_win")))
-    return (pairs, dropped) if return_dropped else pairs
+    return pairs, dropped
 
 
-def containment_pairs(
-    feats: DataFrame,
-    max_anchor_bucket: int = 1000,
-) -> DataFrame:
+def containment_pairs(feats: DataFrame) -> DataFrame:
     """feats: (id, norm_caption: string, shingle_hashes: array<long>).
 
     Returns (id_l, id_r, families=['substring']) for pairs where one
     normalized caption contains the other (strictly different ids;
     equal captions are the exact path's job but are caught here too).
+
+    Container anchors are admitted by lsh._admit with cap
+    ``MAX_ANCHOR_BUCKET``. An anchor held by one row can only pair that
+    row with itself, which the c_id != t_id filter removes anyway. The
+    dropped anchors are not returned: the pair-only return type is kept
+    for existing callers.
     """
     contained = feats.select(
         F.col("id").alias("c_id"),
@@ -187,9 +182,8 @@ def containment_pairs(
         F.explode("shingle_hashes").alias("anchor"),
     )
 
-    sizes = container.groupBy("anchor").agg(F.count("*").alias("n"))
-    admitted = sizes.where(F.col("n") <= max_anchor_bucket).select("anchor")
-    container = container.join(admitted, "anchor", "left_semi")
+    container = _admit(container, ["anchor"], MAX_ANCHOR_BUCKET)[0] \
+        .drop("bucket_size")
 
     hits = (
         contained.join(container, "anchor")

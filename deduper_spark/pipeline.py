@@ -64,6 +64,7 @@ from deduper_spark.functions.text import (
     tokens_expr,
 )
 from deduper_spark.operators.cc import connected_components
+from deduper_spark.operators.exact import MAX_COLLECTED_GROUPS
 from deduper_spark.operators.lsh import (
     array_band_buckets,
     candidate_pairs,
@@ -93,14 +94,12 @@ class PipelineResult:
 class DedupPipeline:
     def __init__(self, config: DedupConfig | None = None,
                  families: tuple[str, ...] = ALL_FAMILIES,
-                 verify_pixels: bool = True,
                  collect_metrics: bool = True):
         """collect_metrics=False drops the per-partition lineage jobs
         and hot-bucket accounting collects — for benchmark runs where
         every extra action is measured overhead."""
         self.config = config or DedupConfig()
         self.families = families
-        self.verify_pixels = verify_pixels
         self.collect_metrics = collect_metrics
         self.metrics: list[dict] = []
 
@@ -234,8 +233,8 @@ class DedupPipeline:
 
         Shuffle economics at 10^12 rows:
           * Hamming families: the 8-byte fingerprint RIDES the bucket
-            row, so `bit_count(xor) <= t` evaluates inside the
-            self-join's codegen stage — false candidates (the 16-bit
+            row, so `bit_count(xor) <= t` evaluates inside the pair
+            enumeration's codegen stage — false candidates (the 16-bit
             band flood: measured 33M candidates at n=400k) die before
             any downstream shuffle (lsh.hamming_candidate_pairs).
           * minhash: banding is selective (128-perm buckets), so its
@@ -317,7 +316,7 @@ class DedupPipeline:
                 # full mode: pairs confirmed ONLY by phash need the
                 # pixel check; pairs any other family confirmed stand.
                 # fuzzy_ok feeds both branches of that split — pin it
-                # once or the candidate self-join (the single most
+                # once or the candidate pairing (the single most
                 # expensive shuffle in the pipeline) runs twice
                 t_cand = time.time()
                 fuzzy_ok = fuzzy_ok.localCheckpoint()
@@ -356,8 +355,8 @@ class DedupPipeline:
         """How phash pairs are pixel-verified: "full" (candidate_edges
         decodes every pair only phash confirmed), "audit" (run() decodes
         a sample of the edges checkpoint's phash pairs) or None (no
-        phash family, or verify_pixels=False)."""
-        if "phash" not in self.families or not self.verify_pixels:
+        phash family)."""
+        if "phash" not in self.families:
             return None
         return "audit" if self.config.fuzzy.psnr_mode == "audit" else "full"
 
@@ -630,7 +629,7 @@ class DedupPipeline:
         # cap-limited exactly like the exact path's build_report;
         # dupe_groups now includes preloaded-hit groups, so the cap
         # gates on the TOTAL group count
-        if 0 < (n_groups + pre_groups) <= 1000:
+        if 0 < (n_groups + pre_groups) <= MAX_COLLECTED_GROUPS:
             for r in dupe_groups.collect():
                 report.dupes[r["cluster_id"]] = {
                     "member_ids": list(r["member_ids"]),

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are sized from the host (local[cores], single JVM, heap about
-half of physical memory) but every knob is the one you would set on a
-real cluster: AQE on (runtime re-plan + skew-join splitting), shuffle
+Defaults are sized from the host (local[cores], single JVM, maximum
+heap about half of physical memory, grown on demand) but every knob is
+the one you would set on a real cluster: AQE on (runtime re-plan + skew-join splitting), shuffle
 partitions sized to cores, Arrow enabled for the pandas-UDF signature
 kernels. ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` override the
 host-derived cores and heap.
@@ -83,8 +83,8 @@ def get_spark(
         # "often faster than sort-merge when one side is moderately
         # small per partition" — skips both sort passes). 64 MB per
         # partition is safely inside executor memory at any scale; the
-        # candidate self-joins and verify joins here are all bounded by
-        # the bucket caps, so the build sides stay small.
+        # verify joins here are all bounded by the bucket caps, so the
+        # build sides stay small.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
@@ -92,16 +92,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode: the driver heap IS the cluster memory — size it to
         # the host (every task's Arrow batches + cache + shuffle live in
-        # one JVM; an 8g heap GC-thrashed under 32 threads).
-        # Pre-touch the full heap at startup: lazy heap growth made the
-        # FIRST memory-hungry job page-fault tens of GB under 32-thread
-        # concurrency (measured 67 s -> 3 s with pre-touch). Same
-        # practice as -Xms=-Xmx on production executors.
+        # one JVM; an 8g heap GC-thrashed under 32 threads). This is
+        # the MAXIMUM heap: the JVM grows into it, so a session commits
+        # only what it uses. (Pre-touching the whole heap at start paid
+        # off on a 32-core host, 67 s -> 3 s for the first memory-hungry
+        # job; on 4 cores it only raised peak RSS.)
         .config("spark.driver.memory", driver_memory)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_memory} -XX:+AlwaysPreTouch",
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # static conf: keep every generated class of the session. With an

@@ -97,7 +97,6 @@ def write_table(df: DataFrame, ident_or_path: str, overwrite: bool = True) -> No
 def _write_reconciled(
     spark: SparkSession,
     checks: dict[str, tuple[str | None, DataFrame, int]],
-    reconcile: bool = True,
 ) -> dict[str, int]:
     """Write each configured sink (``name -> (path, df, expected
     rows)``; a None path is skipped), then reconcile the rows in
@@ -112,15 +111,13 @@ def _write_reconciled(
     for wave in ([n for n in sinks if n != "hashes"],
                  [n for n in sinks if n == "hashes"]):
         if wave:
-            written.update(_write_wave(spark, {n: sinks[n] for n in wave},
-                                       reconcile))
+            written.update(_write_wave(spark, {n: sinks[n] for n in wave}))
     return written
 
 
 def _write_wave(
     spark: SparkSession,
     sinks: dict[str, tuple[str, DataFrame, int]],
-    reconcile: bool,
 ) -> dict[str, int]:
     """Write independent sinks concurrently, one driver thread each,
     then count them back and reconcile.
@@ -148,7 +145,7 @@ def _write_wave(
               .collect()}
     written = {name: counts.get(name, 0) for name in sinks}
     for name, (_, _, expected) in sinks.items():
-        if reconcile and written[name] != expected:
+        if written[name] != expected:
             raise ReconciliationError(
                 f"sink '{name}' wrote {written[name]} rows, report expects "
                 f"{expected}"
@@ -163,7 +160,6 @@ def write_pipeline_outputs(
     config,  # DedupConfig
     n_fresh: int,
     preloaded_hashes: int = 0,
-    reconcile: bool = True,
 ) -> dict[str, int]:
     """Write the fuzzy pipeline's configured sinks (DedupConfig
     target/dupes/hashes/clusters paths — reference sink wiring:
@@ -186,7 +182,7 @@ def write_pipeline_outputs(
         "hashes": (config.hashes_path, result.hash_ledger,
                    report.hash_count - preloaded_hashes),
     }
-    return _write_reconciled(spark, checks, reconcile)
+    return _write_reconciled(spark, checks)
 
 
 def write_dedup_outputs(
@@ -196,7 +192,6 @@ def write_dedup_outputs(
     target_path: str | None = None,
     dupes_path: str | None = None,
     hashes_path: str | None = None,
-    reconcile: bool = True,
 ) -> dict[str, int]:
     """Write the reference's three sinks and reconcile counts against
     the report: target == recordCount - dupeCount
@@ -209,4 +204,4 @@ def write_dedup_outputs(
         "dupes": (dupes_path, result.dupe_groups, report.distinct_dupe_count),
         "hashes": (hashes_path, result.hash_ledger, report.hash_count),
     }
-    return _write_reconciled(spark, checks, reconcile)
+    return _write_reconciled(spark, checks)

@@ -37,8 +37,8 @@ rescan is gone):
 
   * SIZING no longer recomputes ``ledger.groupBy(band, bucket)`` from
     the raw ledger each batch. Every non-empty batch maintains an
-    incremental bucket-size SNAPSHOT at ``sizes_dir`` (default
-    ``<ledger_dir>_sizes``), partitioned by batch_id: snapshot(N) =
+    incremental bucket-size SNAPSHOT at ``<ledger_dir>_sizes``,
+    partitioned by batch_id: snapshot(N) =
     snapshot(prev) + this batch's appended band rows, one tiny
     aggregation over (previous snapshot ∪ batch deltas). The guard
     reads ONLY the latest prior snapshot — bounded by the bucket
@@ -77,6 +77,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from deduper_spark.errors import MISSING_OR_EMPTY_PATH, absent_state
+
+# Buckets of the optional ledger table, bucketed on (band, bucket).
+LEDGER_TABLE_BUCKETS = 16
 
 
 def _band_rows(df: DataFrame, id_col: str, fp_col: str,
@@ -185,9 +188,7 @@ def stream_fuzzy_dedup(
     ledger_bucket_cap: int = 20_000,
     on_metrics=None,
     dropped_dir: str | None = None,
-    sizes_dir: str | None = None,
     ledger_table: str | None = None,
-    ledger_table_buckets: int = 16,
 ):
     """Start (and return) the streaming query. See module docstring.
 
@@ -205,17 +206,16 @@ def stream_fuzzy_dedup(
     divergence), converging the stream to the batch pipeline's
     clustering.
 
-    ``sizes_dir`` defaults to ``<ledger_dir>_sizes``.
-
     ``ledger_table`` (optional): keep the band ledger in a Spark table
-    bucketed on (band, bucket) instead of the batch-partitioned parquet
-    dir — the probe join then never re-shuffles the ledger side
-    (module docstring, per-batch cost model). ``ledger_dir`` is unused
-    for probing in this mode (the sizes default still derives from it).
+    bucketed on (band, bucket), in ``LEDGER_TABLE_BUCKETS`` buckets,
+    instead of the batch-partitioned parquet dir — the probe join then
+    never re-shuffles the ledger side (module docstring, per-batch cost
+    model). ``ledger_dir`` is unused for probing in this mode (the
+    sizes snapshot still derives its path from it).
     """
     from pyspark.errors import AnalysisException
 
-    sizes_path = sizes_dir or (ledger_dir.rstrip("/") + "_sizes")
+    sizes_path = ledger_dir.rstrip("/") + "_sizes"
     stream = spark.readStream.schema(source_schema).parquet(source_dir)
 
     def _read_ledger(s: SparkSession, batch_id: int) -> DataFrame | None:
@@ -394,7 +394,7 @@ def stream_fuzzy_dedup(
                     raise
             if not already:
                 (out_bands.write.mode("append")
-                 .bucketBy(ledger_table_buckets, "band", "bucket")
+                 .bucketBy(LEDGER_TABLE_BUCKETS, "band", "bucket")
                  .sortBy("band", "bucket")
                  .format("parquet").saveAsTable(ledger_table))
         # sizes snapshot LAST: written iff the batch's ledger append is

@@ -10,7 +10,7 @@ from deduper_spark.session import get_spark
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("deduper_spark_tests", master="local[4]", shuffle_partitions=4,
-                  driver_memory="6g")  # small heap: pre-touch stays fast
+                  driver_memory="6g")
     yield s
     s.stop()
 

@@ -3,11 +3,15 @@ components, substring containment."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from deduper_spark.operators.cc import connected_components
 from deduper_spark.operators.lsh import (
     SALT_CAP,
+    block_pairs,
     candidate_pairs,
     int64_band_buckets,
     union_pairs,
@@ -29,6 +33,82 @@ def test_candidate_pairs_and_hot_bucket_cap(spark):
     assert got == {("a", "b"), ("a", "c"), ("b", "c")}
     d = dropped.collect()
     assert len(d) == 1 and d[0]["bucket_size"] == SALT_CAP + 1
+
+
+def _hamming_pred():
+    return (
+        ("val", "max_ham"),
+        lambda lm, rm: [
+            F.bit_count(lm["val"].bitwiseXOR(rm["val"])).alias("dist"),
+            lm["max_ham"].alias("max_ham"),
+        ],
+        lambda p: p["dist"] <= p["max_ham"],
+        lambda a, b: bin((a["val"] ^ b["val"]) & (2**64 - 1)).count("1") <= 30,
+    )
+
+
+def _jaccard_pred():
+    def jac(lm, rm):
+        inter = F.size(F.array_intersect(lm["grams"], rm["grams"]))
+        union = F.size(F.array_union(lm["grams"], rm["grams"]))
+        return [F.round(inter / F.greatest(union, F.lit(1)), 6).alias("j")]
+
+    def ref(a, b):
+        ga, gb = set(a["grams"]), set(b["grams"])
+        return len(ga & gb) / max(len(ga | gb), 1) >= 0.3
+
+    return ("grams",), jac, lambda p: p["j"] >= 0.3, ref
+
+
+@pytest.mark.parametrize("pred", ["hamming", "jaccard", "always"])
+def test_block_pairs_split_equals_unsplit_and_brute_force(spark, pred):
+    """The exact pair kernel: a hot group split into n_sub = 4 triangle
+    sub-groups (40 members, max_cell 10) yields the same pairs as the
+    unsplit run and as brute force, each pair once per shared group with
+    id_l < id_r; a group of cap + 1 members is dropped and reported."""
+    members, fields, keep, ref = {
+        "hamming": _hamming_pred,
+        "jaccard": _jaccard_pred,
+        "always": lambda: ((), lambda lm, rm: [], None, lambda a, b: True),
+    }[pred]()
+    cap = 45
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(8)]
+
+    def row(g, i):
+        return {"g": g, "id": f"r{i:03d}",
+                "val": rng.getrandbits(64) - 2**63, "max_ham": 30,
+                "grams": rng.sample(vocab, rng.randint(1, 5))}
+
+    rows = [row("hot", i) for i in range(40)]           # split, n_sub 4
+    rows += [row("cold", i) for i in range(3)]          # ids shared with hot
+    rows += [row("one", 0)]                             # singleton: no pairs
+    rows += [row("stop", i) for i in range(cap + 1)]    # over the cap
+    df = spark.createDataFrame(
+        rows, "g string, id string, val long, max_ham int, grams array<string>")
+
+    def run(max_cell):
+        pairs, dropped = block_pairs(df, ["g"], cap, max_cell,
+                                     members, fields, keep)
+        got = [(r["g"], r["id_l"], r["id_r"]) for r in pairs.collect()]
+        return got, {(r["g"], r["bucket_size"]) for r in dropped.collect()}
+
+    split, dropped = run(10)
+    whole, _ = run(10**6)
+    by_group: dict = {}
+    for r in rows:
+        by_group.setdefault(r["g"], []).append(r)
+    truth = {
+        (g, a["id"], b["id"])
+        for g, ms in by_group.items() if 2 <= len(ms) <= cap
+        for i, a in enumerate(ms) for b in ms[i + 1:]
+        if ref(a, b)
+    }
+    assert len(split) == len(set(split))                # each pair once
+    assert all(l < r for _, l, r in split)
+    assert set(split) == set(whole) == truth
+    assert any(g == "hot" for g, _, _ in truth)
+    assert dropped == {("stop", cap + 1)}
 
 
 def test_int64_band_buckets_pigeonhole(spark):

@@ -184,7 +184,7 @@ def test_winnowed_substring_pairs_operator(spark, substring_corpus):
             (r["id_l"], r["id_r"])
             for r in winnowed_substring_pairs(
                 df.repartition(parts), min_len=45
-            ).collect()
+            )[0].collect()
         }
         assert got == want, f"mismatch at {parts} partitions"
 

@@ -230,16 +230,16 @@ def test_ngram_hot_block_capped(spark):
     df = spark.createDataFrame(boiler + normal, ["doc_id", "text"])
 
     pairs, dropped = ngram_jaccard_pairs(
-        df, threshold=0.3, max_block_size=50, return_dropped=True
+        df, threshold=0.3, max_block_size=50
     )
     got = {(r["id_l"], r["id_r"]) for r in pairs.collect()}
     assert got == {("100", "101")} or got == {(100, 101)}
     drop_rows = dropped.collect()
-    assert len(drop_rows) == 1 and drop_rows[0]["block_size"] == 60
+    assert len(drop_rows) == 1 and drop_rows[0]["bucket_size"] == 60
 
     # cap off (default 2000): the flooded block pairs quadratically
     # (60 boiler docs share 3 of 9 grams -> jaccard 0.33 >= 0.3)
-    uncapped = ngram_jaccard_pairs(df, threshold=0.3)
+    uncapped, _ = ngram_jaccard_pairs(df, threshold=0.3)
     assert uncapped.count() > 1000
 
 
@@ -389,15 +389,14 @@ def test_preload_seen_corrupt_ledger_raises(spark, tmp_path):
 
     df = spark.createDataFrame(make_pdf(42, 20))
     pipe = DedupPipeline(DedupConfig(seen_hashes_path=str(bad)),
-                         families=("exact",), verify_pixels=False,
-                         collect_metrics=False)
+                         families=("exact",), collect_metrics=False)
     with pytest.raises(Exception):
         pipe.run(spark, df)
 
     # absent path still == clean first run
     pipe2 = DedupPipeline(
         DedupConfig(seen_hashes_path=str(tmp_path / "missing")),
-        families=("exact",), verify_pixels=False, collect_metrics=False)
+        families=("exact",), collect_metrics=False)
     res = pipe2.run(spark, df)
     assert res.report.success
 
@@ -444,8 +443,8 @@ def test_winnowed_substring_dropped_fp_metered(spark):
                     "with the boilerplate cluster at all here")]
     df = spark.createDataFrame(rows, ["id", "norm_caption"])
     pairs, dropped = winnowed_substring_pairs(
-        df, min_len=45, max_fp_bucket=10, return_dropped=True
+        df, min_len=45, max_fp_bucket=10
     )
     assert pairs.count() == 0  # all boiler pairs lived in dropped buckets
     d = dropped.collect()
-    assert d and all(r["n"] == 30 for r in d)
+    assert d and all(r["bucket_size"] == 30 for r in d)

@@ -108,8 +108,8 @@ def test_ngram_triangle_blocks_exact_parity(spark):
     from deduper_spark.operators.dedup_text import ngram_jaccard_pairs
 
     df = _ngram_corpus(spark, 40)
-    split = ngram_jaccard_pairs(df, threshold=0.0, max_task_rows=10)
-    whole = ngram_jaccard_pairs(df, threshold=0.0, max_task_rows=10**9)
+    split, _ = ngram_jaccard_pairs(df, threshold=0.0, max_task_rows=10)
+    whole, _ = ngram_jaccard_pairs(df, threshold=0.0, max_task_rows=10**9)
     got = {(r["id_l"], r["id_r"], r["jaccard"]) for r in split.collect()}
     want = {(r["id_l"], r["id_r"], r["jaccard"]) for r in whole.collect()}
     assert got == want

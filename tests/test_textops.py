@@ -13,7 +13,7 @@ from deduper_spark.config import FuzzyConfig
 from deduper_spark.functions.textstats import (
     fingerprint_expr,
     lang_id_expr,
-    quality_score_expr,
+    quality_micro_expr,
     token_count_expr,
 )
 from deduper_spark.operators import dedup_text
@@ -63,10 +63,10 @@ def test_lang_id_votes(spark):
 
 def test_quality_score_range(spark):
     df = spark.read.parquet(f"{SF}/documents.parquet")
-    stats = df.select(quality_score_expr("text").alias("q")).agg(
+    stats = df.select(quality_micro_expr("text").alias("q")).agg(
         F.min("q").alias("lo"), F.max("q").alias("hi")
     ).collect()[0]
-    assert 0.0 <= stats["lo"] <= stats["hi"] <= 1.0
+    assert 0 <= stats["lo"] <= stats["hi"] <= 1_000_000
 
 
 def test_fingerprint_stability(spark):
@@ -107,7 +107,7 @@ def test_doc_dedup_family(spark):
                   if r["id_r"] - r["id_l"] == 200000}
     assert len(planted_sh) >= near.count() * 0.5
 
-    nj = ngram_jaccard_pairs(aug2, threshold=0.3).collect()
+    nj = ngram_jaccard_pairs(aug2, threshold=0.3)[0].collect()
     planted_nj = {(r["id_l"], r["id_r"]) for r in nj
                   if r["id_r"] - r["id_l"] == 200000}
     assert len(planted_nj) >= near.count() * 0.7
